@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from comet_spark import catalog
 from comet_spark.functions.text import STOPWORDS_EN, tokenize
 from comet_spark.operators.autocut import autocut
 from comet_spark.operators.bm25 import BM25, tokenize_py
@@ -44,6 +45,7 @@ from comet_spark.operators.metadata import (
     q100,
 )
 from comet_spark.plans.builder import Corpus
+from comet_spark.session import TABLES
 
 # ---------------------------------------------------------------------------
 # shared fixtures (pinned; the oracle SQL inlines the same constants)
@@ -73,57 +75,39 @@ def _art_dir(sf_dir: str) -> str:
 _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
 
-def _skey(spark: SparkSession) -> str:
-    """Stable per-session memo key. applicationId, NOT id(spark): a GC'd
-    session's reused object address could alias a fresh session onto a
-    stale memo entry (cached DataFrames, already-exported artifacts)."""
-    return spark.sparkContext.applicationId
-
-
 # query PLAN memoization (r13 optimization, guide §5 — the driver should
 # do almost no per-execution work): building a registered query's
 # DataFrame costs 0.05-0.5 s of driver-side work (py4j roundtrips + one
 # eager analyzer run per transform; ~95-node plans for the hybrids), paid
 # on EVERY bench pass for a plan that is a pure function of
-# (session, sf_dir, corpus). The memo stores the ANALYZED LOGICAL PLAN
+# (session, sf_dir, corpus). The catalog stores the ANALYZED LOGICAL PLAN
 # only and re-wraps it in a FRESH Dataset per call
 # (Dataset.ofRows → new QueryExecution), so every execution re-optimizes,
 # re-plans and recomputes from the parquet inputs — shuffles and scans
 # all re-run (verified: re-collecting the SAME DataFrame object reuses
 # AQE's materialized stages at ~0.13 s, while a fresh ofRows wrap of the
 # memoized plan runs the full ~1 s computation). This is prepared-
-# statement reuse, not result caching. Keyed by the full base-table
-# corpus fingerprint (same staleness contract as _T_CACHE): a
+# statement reuse, not result caching. Keyed on every base table, so a
 # regenerated fixture re-routes into a fresh build, which also re-runs
 # the builder's own gates and asserts for the new corpus. First call in
 # a session builds normally (paying any artifact-build / conf-set side
-# effects, which are themselves session-memoized by their builders).
-_PLAN_MEMO: dict[tuple[str, str, str, str], object] = {}
-_SIG_ALL_TABLES: str | None = None
-
-
-def _all_tables_sig(sf_dir: str) -> str:
-    global _SIG_ALL_TABLES
-    if _SIG_ALL_TABLES is None:
-        from comet_spark.session import TABLES
-
-        _SIG_ALL_TABLES = "+".join(TABLES)
-    return _corpus_sig(sf_dir, _SIG_ALL_TABLES)
+# effects, which are themselves catalog-memoized by their builders).
+_ALL_TABLES = "+".join(TABLES)
 
 
 def _plan_memoized(
     name: str, fn: Callable[[SparkSession, str], DataFrame]
 ) -> Callable[[SparkSession, str], DataFrame]:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        sig = _all_tables_sig(sf_dir)
-        if sig == "":  # missing table ⇒ staleness guard is vacuous: never memoize
-            return fn(spark, sf_dir)
-        key = (_skey(spark), sf_dir, name, sig)
-        jplan = _PLAN_MEMO.get(key)
-        if jplan is None:
-            df = fn(spark, sf_dir)
-            _PLAN_MEMO[key] = df._jdf.queryExecution().analyzed()
-            return df
+        built: list[DataFrame] = []
+
+        def build():
+            built.append(fn(spark, sf_dir))
+            return built[0]._jdf.queryExecution().analyzed()
+
+        jplan = catalog.get(f"plan/{name}", spark, sf_dir, _ALL_TABLES, build)
+        if built:
+            return built[0]
         # the two runtime confs _t() asserts (nanosAsLong at scan time,
         # session timezone at NTZ→instant conversion) matter at
         # EXECUTION time, and on this memo-hit path fn — and thus _t —
@@ -152,14 +136,9 @@ def _register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str 
 # base-table PLAN memoization (r13 optimization): `spark.read.parquet`
 # costs ~90 ms of driver-side analysis (footer schema read + FileIndex
 # build) on EVERY call, and a bench pass issues ~2-3 table reads per
-# query × 169 queries — tens of seconds of pure plan-build. The memo
+# query × 169 queries — tens of seconds of pure plan-build. The catalog
 # stores the lazy DataFrame (a PLAN, never data or results; every
-# execution still scans the parquet), keyed by the corpus fingerprint
-# so a regenerated fixture gets a fresh read — stricter than the
-# session-keyed data caches below.
-_T_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
-
-
+# execution still scans the parquet).
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # Contract for every events consumer below: `ts` is int64 epoch
@@ -177,21 +156,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         if spark.conf.get("spark.sql.session.timeZone") != "UTC":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (_skey(spark), sf_dir, name, _corpus_sig(sf_dir, name))
-    if key not in _T_CACHE:
+
+    def build() -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events" and not isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn(
                 "ts", F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
             )
-        _T_CACHE[key] = df
-    return _T_CACHE[key]
+        return df
 
-
-# memoized partition counts for _fanout's gate (the count is a
-# driver-only file-split probe; asking the RDD each call would rebuild
-# the physical plan)
-_NPART_CACHE: dict[tuple[str, str, str], int] = {}
+    return catalog.get(f"t/{name}", spark, sf_dir, name, build)
 
 
 def _fanout(
@@ -200,95 +174,25 @@ def _fanout(
     key: tuple[str, str],
     by: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """Gated equalizer for under-split LOCAL scans (the `_docs_par`
-    pattern, generalized): the local fixtures are ONE parquet file each
-    = one input split, so explode/aggregate/probe stages over them run
-    on a single core while the rest idle. When the scan provides fewer
-    partitions than cores, fan out with one tiny round-robin exchange;
-    on a cluster corpus (many files >= cores) the gate never fires and
-    the shipped plan is the 100 TB plan verbatim. ``key`` names the
-    (table, sf_dir) the count is memoized under. ``by`` hash-partitions
-    on those columns instead of round-robin so a downstream aggregation
-    keyed on a superset of them can reuse the exchange."""
+    """Gated equalizer for under-split LOCAL scans: the local fixtures
+    are ONE parquet file each = one input split, so explode/aggregate/
+    probe stages over them run on a single core while the rest idle.
+    When the scan provides fewer partitions than cores, fan out with one
+    tiny round-robin exchange; on a cluster corpus (many files >= cores)
+    the gate never fires and the shipped plan is the 100 TB plan
+    verbatim. ``key`` names the (table, sf_dir) the partition count — a
+    file-split probe that runs no Spark job — is memoized under. ``by``
+    hash-partitions on those columns instead of round-robin so a
+    downstream aggregation keyed on a superset of them can reuse the
+    exchange."""
     par = spark.sparkContext.defaultParallelism
-    k = (_skey(spark),) + key
-    if k not in _NPART_CACHE:
-        _NPART_CACHE[k] = df.rdd.getNumPartitions()
-    if _NPART_CACHE[k] >= par:
+    table, sf_dir = key
+    npart = catalog.get(
+        f"npart/{table}", spark, sf_dir, table, lambda: df.rdd.getNumPartitions()
+    )
+    if npart >= par:
         return df
     return df.repartition(par, *by) if by else df.repartition(par)
-
-
-# BM25 'index build' memoized per (session, corpus). The postings are
-# PERSISTED as a term-bucketed table and every query reads that layout —
-# the serialization sink IS the serving path (like the reference's on-disk
-# inverted index, bm25_index.go:423+): a session that finds the artifact
-# already built skips the corpus tokenize/shuffle entirely, and each
-# query's literal-term isin prunes the scan to its terms' buckets. At
-# 100 TB the build shuffle is the dominant BM25 cost; paying it once per
-# CORPUS (not once per session) is the difference that matters.
-_BM25_CACHE: dict[tuple[str, str], BM25] = {}
-_BM25_BUCKETS = 16
-
-
-def _corpus_sig(sf_dir: str, table: str) -> str:
-    """Cheap change-detector for a testdata table: file names + sizes +
-    mtimes. Guards cross-session reuse of derived artifacts — the driver
-    can regenerate testdata between rounds, and serving a stale index
-    against a fresh corpus must be impossible. Handles BOTH layouts the
-    driver has shipped: a parquet DIRECTORY (walked) and a single
-    parquet FILE (os.walk on a non-directory yields nothing, which
-    would have made every signature '' and the guard vacuous). An empty
-    signature (missing table) never validates — callers treat '' as
-    stale. ``table`` may name several tables joined with '+'
-    (``"documents+embeddings"`` for artifacts derived from both — the
-    unified doc stream): any missing member voids the WHOLE signature,
-    so a partial regen still re-routes into the rebuild."""
-    if "+" in table:
-        subs = [_corpus_sig(sf_dir, t) for t in table.split("+")]
-        return "" if any(s == "" for s in subs) else "||".join(subs)
-    root = f"{sf_dir}/{table}.parquet"
-    paths = []
-    if os.path.isdir(root):
-        for dirpath, _, files in sorted(os.walk(root)):
-            paths.extend(os.path.join(dirpath, f) for f in sorted(files))
-    elif os.path.exists(root):
-        paths.append(root)
-    parts = []
-    for p in paths:
-        st = os.stat(p)
-        parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
-
-
-def _live_cache_key(
-    spark: SparkSession, sf_dir: str, table: str
-) -> tuple[str, str, str]:
-    """Memo key for per-session caches layered OVER a corpus-signature-
-    gated artifact: (session, sf_dir, corpus fingerprint). Keying by the
-    fingerprint the scaffold itself validates means a mid-session
-    testdata regen rebuilds the artifact AND drops the memoized serving
-    view in the same breath — without it the scaffold would rebuild but
-    the cache would keep serving the stale view, breaking the
-    scaffold's own staleness promise (VERDICT r11). _corpus_sig is a
-    stat() walk over one parquet table — microseconds, per query."""
-    return (_skey(spark), sf_dir, _corpus_sig(sf_dir, table))
-
-
-def _evict_superseded(cache: dict, key: tuple, unpersist=None) -> None:
-    """Drop cache entries the fingerprint in ``key`` supersedes — same
-    (session, sf_dir), different corpus sig (a mid-session fixture
-    regen). Without this every regen strands the old entry forever; for
-    caches whose values pin executor storage (.cache()'d graph blobs,
-    BM25 side tables) ``unpersist(value)`` releases it (review r12 —
-    the same leak the soak loop already handles for its iterations)."""
-    for k in [k for k in cache if k[:2] == key[:2] and k != key]:
-        val = cache.pop(k)
-        if unpersist is not None:
-            try:
-                unpersist(val)
-            except Exception:  # noqa: BLE001 — eviction is best-effort
-                pass
 
 
 def _pin_view(pair):
@@ -302,119 +206,59 @@ def _pin_view(pair):
     return ix, view.cache()
 
 
-def _unpin_view(pair) -> None:
-    pair[1].unpersist()
+# --- ANN artifact build-once (r14, VERDICT r13 #4) -------------------------
+# The trained ANN models (IVF centroids, PQ/IVFPQ codebooks, the
+# maintenance stores) are reopened from a signature-stamped artifact
+# instead of retrained every SESSION — 2-10 s of k-means + encode + write
+# per family on a cold session. Training is deterministic
+# (seedless uniform-spacing k-means init over id order), and the on-disk
+# artifacts are the single source of truth both engines replay, so
+# reopening a signature-fresh artifact is value-identical to rebuilding it.
+def _build_once(sf_dir: str, base: str, probe, build, table: str = "embeddings"):
+    return catalog.build_once(
+        f"{base}/corpus_sig.txt", catalog.corpus_sig(sf_dir, table), probe, build
+    )
 
 
-# --- ANN artifact build-once scaffold (r14, VERDICT r13 #4) ---------------
-# The BM25 index already pays its corpus-wide build once per CORPUS
-# (signature-stamped artifact, _fresh_bm25_artifact); the trained ANN
-# models (IVF centroids, PQ/IVFPQ codebooks, the maintenance stores) were
-# still retrained every SESSION — 2-10 s of k-means + encode + write per
-# family on the driver's cold pass. Training is deterministic (seedless
-# uniform-spacing k-means init over id order), and the on-disk artifacts
-# are the single source of truth both engines replay, so reopening a
-# signature-fresh artifact is value-identical to rebuilding it. The stamp
-# is written LAST, so a crash mid-build re-routes the next session into
-# the rebuild; probing a reader keeps a partially-cleaned artifact from
-# turning into per-query failures.
-
-
-def _ann_sig_fresh(sf_dir: str, base: str, table: str = "embeddings") -> bool:
-    sig = _corpus_sig(sf_dir, table)
-    try:
-        with open(f"{base}/corpus_sig.txt") as fh:
-            return sig != "" and fh.read() == sig
-    except OSError:
-        return False
-
-
-def _ann_sig_stamp(sf_dir: str, base: str, table: str = "embeddings") -> None:
-    sig = _corpus_sig(sf_dir, table)
-    if sig == "":  # missing table must never stamp a valid artifact
-        return
-    os.makedirs(base, exist_ok=True)
-    with open(f"{base}/corpus_sig.txt", "w") as fh:
-        fh.write(sig)
-
-
-def _probe_export_done(
-    spark: SparkSession, sf_dir: str, path: str, table: str = "embeddings"
-) -> bool:
-    """True when a lazily-written probe/LUT export at ``path`` is already
-    on disk for THIS corpus — its own .sig stamp (written after the
-    parquet) matches and the parquet reads. Such exports are pure
-    functions of (trained model, pinned query vector), both derived from
-    ``table``, so a fresh stamp means the bytes are already right."""
-    sig = _corpus_sig(sf_dir, table)
-    try:
-        with open(f"{path}.sig") as fh:
-            if sig == "" or fh.read() != sig:
-                return False
-        spark.read.parquet(path).first()
-        return True
-    except Exception:
-        return False
-
-
-def _probe_export_stamp(sf_dir: str, path: str, table: str = "embeddings") -> None:
-    sig = _corpus_sig(sf_dir, table)
-    if sig == "":
-        return
-    with open(f"{path}.sig", "w") as fh:
-        fh.write(sig)
-
-
-def _unpersist_graphs(ix) -> None:
-    ix.graphs.unpersist()
-
-
-def _unpersist_bm25(bm) -> None:
-    # postings included: it is the corpus-sized table — omitting it
-    # would leave the largest block pinned (review r12 pass 2)
-    for t in (bm.postings, bm.doc_len, bm.df, bm.stats):
-        t.unpersist()
+# BM25 'index build' memoized per (session, corpus). The postings are
+# PERSISTED as a term-bucketed table and every query reads that layout —
+# the serialization sink IS the serving path (like the reference's on-disk
+# inverted index, bm25_index.go:423+): a session that finds the artifact
+# already built skips the corpus tokenize/shuffle entirely, and each
+# query's literal-term isin prunes the scan to its terms' buckets. At
+# 100 TB the build shuffle is the dominant BM25 cost; paying it once per
+# CORPUS (not once per session) is the difference that matters.
+_BM25_BUCKETS = 16
 
 
 def _fresh_bm25_artifact(
     spark: SparkSession, sf_dir: str, base: str, build_fn,
     read_path: str | None = None, probe_paths: list[str] | None = None,
 ) -> BM25:
-    """Corpus-signature-gated build-once scaffold shared by EVERY BM25
-    artifact builder (plain, appended, compacted, deleted, stream-built):
-    reopen when the signature matches and the index probes healthy —
-    BOTH stats and postings, so a partially-cleaned artifact routes into
-    the rebuild, not into per-query failures — else run ``build_fn()``
-    (which owns its own cleanup: force_unlock / rmtree) and stamp the
-    signature LAST, so a crash mid-build re-routes the next session into
-    the rebuild. The doc-/vocab-sized side tables come back cached; the
-    postings stay on the bucketed, prunable scan."""
+    """Build-once scaffold shared by EVERY BM25 artifact builder (plain,
+    appended, compacted, deleted, stream-built): reopen when the
+    documents signature matches and the index probes healthy — BOTH
+    stats and postings, plus any sibling ``probe_paths`` the caller
+    serves from, so a partially-cleaned artifact routes into the
+    rebuild, not into per-query failures — else run ``build_fn()``
+    (which owns its own cleanup: force_unlock / rmtree). The doc-/
+    vocab-sized side tables come back cached; the postings stay on the
+    bucketed, prunable scan."""
     read_path = base if read_path is None else read_path
-    sig = _corpus_sig(sf_dir, "documents")
-    sig_path = f"{base}/corpus_sig.txt"
-    try:
-        # an empty signature (missing table) must never validate
-        with open(sig_path) as fh:
-            fresh = sig != "" and fh.read() == sig
-    except OSError:
-        fresh = False
-    try:
-        if not fresh:
-            raise FileNotFoundError(base)
+
+    def probe() -> BM25:
         ix = BM25.read(spark, read_path)
         ix.stats.first()
         ix.postings.first()
-        # sibling components the caller serves from (e.g. a mid-stream
-        # snapshot) gate freshness too — a partially-cleaned artifact
-        # routes into one rebuild, not per-query failures
         for p in probe_paths or []:
             spark.read.parquet(p).first()
-    except Exception:
+        return ix
+
+    def build() -> BM25:
         build_fn()
-        ix = BM25.read(spark, read_path)
-        os.makedirs(base, exist_ok=True)
-        with open(sig_path, "w") as fh:
-            fh.write(sig)
+        return BM25.read(spark, read_path)
+
+    ix = _build_once(sf_dir, base, probe, build, "documents")
     ix.doc_len = ix.doc_len.cache()
     ix.df = ix.df.cache()
     ix.stats = ix.stats.cache()
@@ -422,49 +266,37 @@ def _fresh_bm25_artifact(
 
 
 def _bm25_index(spark: SparkSession, sf_dir: str) -> BM25:
-    # r14: keyed on the corpus fingerprint (the _live_cache_key
-    # convention, VERDICT r13 #6) — a mid-session testdata regen must
-    # re-route into _fresh_bm25_artifact's rebuild instead of serving
-    # the previous corpus's cached side tables
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _BM25_CACHE:
-        _evict_superseded(_BM25_CACHE, key, _unpersist_bm25)
-        base = f"{_art_dir(sf_dir)}/bm25"
+    base = f"{_art_dir(sf_dir)}/bm25"
 
-        def build() -> None:
-            # a crashed previous build can leave the index writer-lock
-            # marker; this builder is the artifact dir's single writer,
-            # so a marker here is always stale — clear it before the
-            # rebuild instead of failing every query until a human does
-            BM25.force_unlock(spark, base)
-            bld = BM25(
-                _t(spark, sf_dir, "documents"), id_col="doc_id",
-                text_col="text", cache=True,
-            )
-            bld.write(base, buckets=_BM25_BUCKETS)
-            for t in (bld.postings, bld.doc_len, bld.df, bld.stats):
-                t.unpersist()
+    def build() -> None:
+        # a crashed previous build can leave the index writer-lock
+        # marker; this builder is the artifact dir's single writer,
+        # so a marker here is always stale — clear it before the
+        # rebuild instead of failing every query until a human does
+        BM25.force_unlock(spark, base)
+        bld = BM25(
+            _t(spark, sf_dir, "documents"), id_col="doc_id",
+            text_col="text", cache=True,
+        )
+        bld.write(base, buckets=_BM25_BUCKETS)
+        for t in (bld.postings, bld.doc_len, bld.df, bld.stats):
+            t.unpersist()
 
-        _BM25_CACHE[key] = _fresh_bm25_artifact(spark, sf_dir, base, build)
-    return _BM25_CACHE[key]
+    return catalog.get(
+        "bm25", spark, sf_dir, "documents",
+        lambda: _fresh_bm25_artifact(spark, sf_dir, base, build),
+    )
 
 
 # the vector corpus is cached once per session like the reference's
-# in-memory index (flat_index.go holds vectors in RAM); ~40 queries share
-# it; fingerprint-keyed so a mid-session regen drops the stale cache (r14)
-_EMB_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# in-memory index (flat_index.go holds vectors in RAM); ~40 queries share it
 def _emb_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _EMB_CACHE:
-        _evict_superseded(_EMB_CACHE, key, lambda df: df.unpersist())
-        _EMB_CACHE[key] = (
-            _t(spark, sf_dir, "embeddings")
-            .select(F.col("vec_id").alias("id"), F.col("embedding").alias("vector"), "label")
-            .cache()
-        )
-    return _EMB_CACHE[key]
+    return catalog.get(
+        "emb", spark, sf_dir, "embeddings",
+        lambda: _t(spark, sf_dir, "embeddings")
+        .select(F.col("vec_id").alias("id"), F.col("embedding").alias("vector"), "label")
+        .cache(),
+    )
 
 
 def _emb_queries(spark: SparkSession, sf_dir: str, vec_ids: tuple[int, ...]) -> DataFrame:
@@ -746,31 +578,28 @@ ORDER BY score DESC, doc_id LIMIT {K}
 # corpus-signature-gated like _bm25_index; the signature is written only
 # after the append, so a crash between write() and append() re-routes
 # into the build branch.
-_BM25_APPEND_CACHE: dict[tuple[str, str], BM25] = {}
-
-
 def _bm25_append_index(spark: SparkSession, sf_dir: str) -> BM25:
-    key = (_skey(spark), sf_dir)
-    if key not in _BM25_APPEND_CACHE:
-        base = f"{_art_dir(sf_dir)}/bm25_append"
+    base = f"{_art_dir(sf_dir)}/bm25_append"
 
-        def build() -> None:
-            BM25.force_unlock(spark, base)  # stale lock from a crashed build
-            docs = _t(spark, sf_dir, "documents")
-            bld = BM25(
-                docs.filter(F.col("doc_id") % 3 != 2),
-                id_col="doc_id", text_col="text", cache=True,
-            )
-            bld.write(base, buckets=_BM25_BUCKETS)
-            for t in (bld.postings, bld.doc_len, bld.df, bld.stats):
-                t.unpersist()
-            BM25.append(
-                spark, base, docs.filter(F.col("doc_id") % 3 == 2),
-                id_col="doc_id", text_col="text",
-            )
+    def build() -> None:
+        BM25.force_unlock(spark, base)  # stale lock from a crashed build
+        docs = _t(spark, sf_dir, "documents")
+        bld = BM25(
+            docs.filter(F.col("doc_id") % 3 != 2),
+            id_col="doc_id", text_col="text", cache=True,
+        )
+        bld.write(base, buckets=_BM25_BUCKETS)
+        for t in (bld.postings, bld.doc_len, bld.df, bld.stats):
+            t.unpersist()
+        BM25.append(
+            spark, base, docs.filter(F.col("doc_id") % 3 == 2),
+            id_col="doc_id", text_col="text",
+        )
 
-        _BM25_APPEND_CACHE[key] = _fresh_bm25_artifact(spark, sf_dir, base, build)
-    return _BM25_APPEND_CACHE[key]
+    return catalog.get(
+        "bm25_append", spark, sf_dir, "documents",
+        lambda: _fresh_bm25_artifact(spark, sf_dir, base, build),
+    )
 
 
 def _bm25_append_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -793,9 +622,6 @@ _register(
 # equality proves the whole maintain-then-consolidate lifecycle: build →
 # append ×3 → compact is value-identical to a fresh build. Reference
 # analog: segment compaction, storage_compaction.go:19-114.
-_BM25_COMPACT_CACHE: dict[tuple[str, str, str], BM25] = {}
-
-
 def _bm25_compacted_index(
     spark: SparkSession, sf_dir: str, subdir: str, mod: int,
     delete_where: str | None = None, **compact_kw
@@ -807,48 +633,48 @@ def _bm25_compacted_index(
     touches it. ``delete_where`` soft-deletes a doc subset (a SQL
     condition over doc_id) BEFORE the compact, so the compact runs under
     a live delete vector."""
-    key = (_skey(spark), sf_dir, subdir)
-    if key not in _BM25_COMPACT_CACHE:
-        base = f"{_art_dir(sf_dir)}/{subdir}"
+    base = f"{_art_dir(sf_dir)}/{subdir}"
 
-        def build() -> None:
-            BM25.force_unlock(spark, base)  # stale lock from a crashed build
-            docs = _t(spark, sf_dir, "documents")
-            bld = BM25(
-                docs.filter(F.col("doc_id") % mod == 0),
-                id_col="doc_id", text_col="text", cache=True,
+    def build() -> None:
+        BM25.force_unlock(spark, base)  # stale lock from a crashed build
+        docs = _t(spark, sf_dir, "documents")
+        bld = BM25(
+            docs.filter(F.col("doc_id") % mod == 0),
+            id_col="doc_id", text_col="text", cache=True,
+        )
+        bld.write(base, buckets=_BM25_BUCKETS)
+        for t in (bld.postings, bld.doc_len, bld.df, bld.stats):
+            t.unpersist()
+        for m in range(1, mod):
+            BM25.append(
+                spark, base, docs.filter(F.col("doc_id") % mod == m),
+                id_col="doc_id", text_col="text",
             )
-            bld.write(base, buckets=_BM25_BUCKETS)
-            for t in (bld.postings, bld.doc_len, bld.df, bld.stats):
-                t.unpersist()
-            for m in range(1, mod):
-                BM25.append(
-                    spark, base, docs.filter(F.col("doc_id") % mod == m),
-                    id_col="doc_id", text_col="text",
+        if delete_where is not None:
+            n_del = BM25.delete(
+                spark, base,
+                docs.filter(delete_where).select("doc_id"),
+                id_col="doc_id",
+            )
+            if not n_del:
+                raise RuntimeError(
+                    f"{subdir} artifact: delete_where matched no docs — "
+                    "the delete lifecycle would be vacuous"
                 )
-            if delete_where is not None:
-                n_del = BM25.delete(
-                    spark, base,
-                    docs.filter(delete_where).select("doc_id"),
-                    id_col="doc_id",
+        BM25.compact(spark, base, **compact_kw)
+        if delete_where is not None and compact_kw.get("tiered"):
+            # non-vacuity: the tiered compact must RETAIN the vector
+            # (the oracle equality below proves it is still applied)
+            if not os.path.exists(f"{base}/deletes"):
+                raise RuntimeError(
+                    f"{subdir} artifact: tiered compact dropped the "
+                    "delete vector"
                 )
-                if not n_del:
-                    raise RuntimeError(
-                        f"{subdir} artifact: delete_where matched no docs — "
-                        "the delete lifecycle would be vacuous"
-                    )
-            BM25.compact(spark, base, **compact_kw)
-            if delete_where is not None and compact_kw.get("tiered"):
-                # non-vacuity: the tiered compact must RETAIN the vector
-                # (the oracle equality below proves it is still applied)
-                if not os.path.exists(f"{base}/deletes"):
-                    raise RuntimeError(
-                        f"{subdir} artifact: tiered compact dropped the "
-                        "delete vector"
-                    )
 
-        _BM25_COMPACT_CACHE[key] = _fresh_bm25_artifact(spark, sf_dir, base, build)
-    return _BM25_COMPACT_CACHE[key]
+    return catalog.get(
+        f"bm25_compact/{subdir}", spark, sf_dir, "documents",
+        lambda: _fresh_bm25_artifact(spark, sf_dir, base, build),
+    )
 
 
 def _bm25_compact_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -928,7 +754,6 @@ _register(
 # scratch — equality proves the stream's append/heal/marker/compact
 # protocol produces the exact index a batch build would (reference
 # analog: search-after-flush, storage_test.go).
-_BM25_STREAM_CACHE: dict[tuple[str, str], BM25] = {}
 _STREAM_MOD = 4  # micro-batches per build
 
 
@@ -1003,57 +828,57 @@ def _drive_bm25_stream_crash(
 
 
 def _bm25_stream_index(spark: SparkSession, sf_dir: str) -> BM25:
-    key = (_skey(spark), sf_dir)
-    if key not in _BM25_STREAM_CACHE:
-        import shutil
+    import shutil
 
-        from comet_spark.storage.store import DocumentStore
-        from comet_spark.streaming.ingest import bm25_ingest_stream
+    from comet_spark.storage.store import DocumentStore
+    from comet_spark.streaming.ingest import bm25_ingest_stream
 
-        base = f"{_art_dir(sf_dir)}/bm25_stream"
-        index_path = f"{base}/index"
+    base = f"{_art_dir(sf_dir)}/bm25_stream"
+    index_path = f"{base}/index"
 
-        def build() -> None:
-            # full rebuild: the checkpoint, source files, store and index
-            # are one coupled lineage — remove them together. This whole
-            # builder (shutil/os on the checkpoint + _lose_latest_commit)
-            # assumes a POSIX-local checkpoint dir — always true for the
-            # oracle artifacts, not a portable object-storage harness.
-            shutil.rmtree(base, ignore_errors=True)
-            os.makedirs(base, exist_ok=True)
-            src, ckpt = f"{base}/src", f"{base}/ckpt"
-            docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-            store = DocumentStore(spark, f"{base}/store", id_col="doc_id")
+    def build() -> None:
+        # full rebuild: the checkpoint, source files, store and index
+        # are one coupled lineage — remove them together. This whole
+        # builder (shutil/os on the checkpoint + _lose_latest_commit)
+        # assumes a POSIX-local checkpoint dir — always true for the
+        # oracle artifacts, not a portable object-storage harness.
+        shutil.rmtree(base, ignore_errors=True)
+        os.makedirs(base, exist_ok=True)
+        src, ckpt = f"{base}/src", f"{base}/ckpt"
+        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        store = DocumentStore(spark, f"{base}/store", id_col="doc_id")
 
-            def _drain() -> None:
-                q = bm25_ingest_stream(
-                    spark.readStream.schema("doc_id bigint, text string")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(src),
-                    store, index_path, checkpoint=ckpt,
-                    id_col="doc_id", text_col="text", buckets=_BM25_BUCKETS,
-                    tiered_compact_every=2,
-                )
-                if not q.awaitTermination(600):
-                    q.stop()
-                    raise RuntimeError("bm25_stream artifact: stream did not drain")
-
-            res = lambda m: docs.filter(F.col("doc_id") % _STREAM_MOD == m)  # noqa: E731
-            # crash after batches {0,1}: batch 1 replays through the
-            # index-probe heal; the final index must carry batch 0's
-            # docs from BEFORE the crash
-            _drive_bm25_stream_crash(
-                spark, src=src, ckpt=ckpt, index_path=index_path,
-                drain=_drain,
-                feed_before=[res(m) for m in range(2)],
-                feed_after=[res(m) for m in range(2, _STREAM_MOD)],
-                replayed_bid=1,
+        def _drain() -> None:
+            q = bm25_ingest_stream(
+                spark.readStream.schema("doc_id bigint, text string")
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src),
+                store, index_path, checkpoint=ckpt,
+                id_col="doc_id", text_col="text", buckets=_BM25_BUCKETS,
+                tiered_compact_every=2,
             )
+            if not q.awaitTermination(600):
+                q.stop()
+                raise RuntimeError("bm25_stream artifact: stream did not drain")
 
-        _BM25_STREAM_CACHE[key] = _fresh_bm25_artifact(
-            spark, sf_dir, base, build, read_path=index_path
+        res = lambda m: docs.filter(F.col("doc_id") % _STREAM_MOD == m)  # noqa: E731
+        # crash after batches {0,1}: batch 1 replays through the
+        # index-probe heal; the final index must carry batch 0's
+        # docs from BEFORE the crash
+        _drive_bm25_stream_crash(
+            spark, src=src, ckpt=ckpt, index_path=index_path,
+            drain=_drain,
+            feed_before=[res(m) for m in range(2)],
+            feed_after=[res(m) for m in range(2, _STREAM_MOD)],
+            replayed_bid=1,
         )
-    return _BM25_STREAM_CACHE[key]
+
+    return catalog.get(
+        "bm25_stream", spark, sf_dir, "documents",
+        lambda: _fresh_bm25_artifact(
+            spark, sf_dir, base, build, read_path=index_path
+        ),
+    )
 
 
 def _bm25_stream_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1082,78 +907,74 @@ _register(
 # (df/n_docs/avgdl over the fed corpus ONLY — a reader that mixed in
 # unfed docs' stats would shift every score). 'final' is scored LIVE
 # off the finished index at query time.
-_BM25_LIVE_CACHE: dict[tuple[str, str, str], BM25] = {}
-
-
 def _bm25_live_index(spark: SparkSession, sf_dir: str) -> BM25:
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _BM25_LIVE_CACHE:
-        _evict_superseded(_BM25_LIVE_CACHE, key, _unpersist_bm25)
-        import shutil
+    import shutil
 
-        from comet_spark.storage.store import DocumentStore
-        from comet_spark.streaming.ingest import bm25_ingest_stream
+    from comet_spark.storage.store import DocumentStore
+    from comet_spark.streaming.ingest import bm25_ingest_stream
 
-        base = f"{_art_dir(sf_dir)}/bm25_live"
-        index_path = f"{base}/index"
+    base = f"{_art_dir(sf_dir)}/bm25_live"
+    index_path = f"{base}/index"
 
-        def build() -> None:
-            # POSIX-local oracle-artifact harness (same contract as the
-            # other stream builders)
-            shutil.rmtree(base, ignore_errors=True)
-            os.makedirs(base, exist_ok=True)
-            src, ckpt = f"{base}/src", f"{base}/ckpt"
-            docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-            store = DocumentStore(spark, f"{base}/store", id_col="doc_id")
+    def build() -> None:
+        # POSIX-local oracle-artifact harness (same contract as the
+        # other stream builders)
+        shutil.rmtree(base, ignore_errors=True)
+        os.makedirs(base, exist_ok=True)
+        src, ckpt = f"{base}/src", f"{base}/ckpt"
+        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        store = DocumentStore(spark, f"{base}/store", id_col="doc_id")
 
-            def _drain() -> None:
-                q = bm25_ingest_stream(
-                    spark.readStream.schema("doc_id bigint, text string")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(src),
-                    store, index_path, checkpoint=ckpt,
-                    id_col="doc_id", text_col="text", buckets=_BM25_BUCKETS,
-                    tiered_compact_every=2,
-                )
-                if not q.awaitTermination(600):
-                    q.stop()
-                    raise RuntimeError(
-                        "bm25_live artifact: stream did not drain"
-                    )
-
-            res = lambda m: docs.filter(F.col("doc_id") % _STREAM_MOD == m)  # noqa: E731
-
-            def _mid_read() -> None:
-                # THE MID-STREAM READ: score the live index between the
-                # drains; it must hold exactly the fed residues {0,1}
-                bm = BM25.read(spark, index_path)
-                n_fed = docs.filter(F.col("doc_id") % _STREAM_MOD <= 1).count()
-                n_idx = bm.doc_len.count()
-                if not (0 < n_idx == n_fed < docs.count()):
-                    raise RuntimeError(
-                        f"bm25_live artifact: mid-read index holds "
-                        f"{n_idx} docs (fed {n_fed}) — not mid-stream"
-                    )
-                bm.score(BM25_QUERY, k=K).select(
-                    F.lit("mid").alias("phase"),
-                    F.col("id").alias("doc_id"), "score",
-                ).repartition(1).write.mode("overwrite").parquet(
-                    f"{base}/mid.parquet"
+        def _drain() -> None:
+            q = bm25_ingest_stream(
+                spark.readStream.schema("doc_id bigint, text string")
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src),
+                store, index_path, checkpoint=ckpt,
+                id_col="doc_id", text_col="text", buckets=_BM25_BUCKETS,
+                tiered_compact_every=2,
+            )
+            if not q.awaitTermination(600):
+                q.stop()
+                raise RuntimeError(
+                    "bm25_live artifact: stream did not drain"
                 )
 
-            _drive_bm25_stream_crash(
-                spark, src=src, ckpt=ckpt, index_path=index_path,
-                drain=_drain,
-                feed_before=[res(m) for m in range(2)],
-                feed_after=[res(m) for m in range(2, _STREAM_MOD)],
-                replayed_bid=1, between_drains=_mid_read,
+        res = lambda m: docs.filter(F.col("doc_id") % _STREAM_MOD == m)  # noqa: E731
+
+        def _mid_read() -> None:
+            # THE MID-STREAM READ: score the live index between the
+            # drains; it must hold exactly the fed residues {0,1}
+            bm = BM25.read(spark, index_path)
+            n_fed = docs.filter(F.col("doc_id") % _STREAM_MOD <= 1).count()
+            n_idx = bm.doc_len.count()
+            if not (0 < n_idx == n_fed < docs.count()):
+                raise RuntimeError(
+                    f"bm25_live artifact: mid-read index holds "
+                    f"{n_idx} docs (fed {n_fed}) — not mid-stream"
+                )
+            bm.score(BM25_QUERY, k=K).select(
+                F.lit("mid").alias("phase"),
+                F.col("id").alias("doc_id"), "score",
+            ).repartition(1).write.mode("overwrite").parquet(
+                f"{base}/mid.parquet"
             )
 
-        _BM25_LIVE_CACHE[key] = _fresh_bm25_artifact(
+        _drive_bm25_stream_crash(
+            spark, src=src, ckpt=ckpt, index_path=index_path,
+            drain=_drain,
+            feed_before=[res(m) for m in range(2)],
+            feed_after=[res(m) for m in range(2, _STREAM_MOD)],
+            replayed_bid=1, between_drains=_mid_read,
+        )
+
+    return catalog.get(
+        "bm25_live", spark, sf_dir, "documents",
+        lambda: _fresh_bm25_artifact(
             spark, sf_dir, base, build, read_path=index_path,
             probe_paths=[f"{base}/mid.parquet"],
-        )
-    return _BM25_LIVE_CACHE[key]
+        ),
+    )
 
 
 def _bm25_live_read_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1207,94 +1028,93 @@ SELECT * FROM (
 # delete-vectored index.
 _BM25_DELSTREAM_WHERE = "doc_id % 4 < 2 AND doc_id % 7 = 1"
 _BM25_DELSTREAM_KEEP_SQL = "NOT (doc_id % 4 < 2 AND doc_id % 7 = 1)"
-_BM25_DELSTREAM_CACHE: dict[tuple[str, str], BM25] = {}
 
 
 def _bm25_delstream_index(spark: SparkSession, sf_dir: str) -> BM25:
-    key = (_skey(spark), sf_dir)
-    if key not in _BM25_DELSTREAM_CACHE:
-        import shutil
+    import shutil
 
-        from comet_spark.storage.store import DocumentStore
-        from comet_spark.streaming.ingest import bm25_ingest_stream
+    from comet_spark.storage.store import DocumentStore
+    from comet_spark.streaming.ingest import bm25_ingest_stream
 
-        base = f"{_art_dir(sf_dir)}/bm25_delstream"
-        index_path = f"{base}/index"
+    base = f"{_art_dir(sf_dir)}/bm25_delstream"
+    index_path = f"{base}/index"
 
-        def build() -> None:
-            # POSIX-local oracle-artifact harness (same contract as the
-            # other stream builders)
-            shutil.rmtree(base, ignore_errors=True)
-            os.makedirs(base, exist_ok=True)
-            src, ckpt = f"{base}/src", f"{base}/ckpt"
-            docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-            store = DocumentStore(spark, f"{base}/store", id_col="doc_id")
+    def build() -> None:
+        # POSIX-local oracle-artifact harness (same contract as the
+        # other stream builders)
+        shutil.rmtree(base, ignore_errors=True)
+        os.makedirs(base, exist_ok=True)
+        src, ckpt = f"{base}/src", f"{base}/ckpt"
+        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        store = DocumentStore(spark, f"{base}/store", id_col="doc_id")
 
-            def _ins(df: DataFrame) -> DataFrame:
-                return df.select(
-                    "doc_id", "text", F.lit(None).cast("string").alias("op")
-                )
-
-            def _drain() -> None:
-                q = bm25_ingest_stream(
-                    spark.readStream
-                    .schema("doc_id bigint, text string, op string")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(src),
-                    store, index_path, checkpoint=ckpt,
-                    id_col="doc_id", text_col="text", buckets=_BM25_BUCKETS,
-                    tiered_compact_every=2, op_col="op",
-                )
-                if not q.awaitTermination(600):
-                    q.stop()
-                    raise RuntimeError(
-                        "bm25_delstream artifact: stream did not drain"
-                    )
-
-            dels = docs.filter(_BM25_DELSTREAM_WHERE)
-            n_del = dels.count()
-            if not n_del:
-                raise RuntimeError(
-                    "bm25_delstream artifact: empty delete set — the "
-                    "delete leg would be vacuous"
-                )
-            res = lambda m: _ins(  # noqa: E731
-                docs.filter(F.col("doc_id") % _STREAM_MOD == m)
+        def _ins(df: DataFrame) -> DataFrame:
+            return df.select(
+                "doc_id", "text", F.lit(None).cast("string").alias("op")
             )
-            # crash after batches {0,1,2}: the latest commit is the
-            # DELETE-carrying batch 2 (fresh inserts + markers in one
-            # micro-batch) — with the state log gone the restart must
-            # classify its insert side committed via the index probe
-            # and re-apply its deletes as a no-op
-            _drive_bm25_stream_crash(
-                spark, src=src, ckpt=ckpt, index_path=index_path,
-                drain=_drain,
-                feed_before=[
-                    res(0), res(1),
-                    res(2).unionByName(dels.select(
-                        "doc_id",
-                        F.lit(None).cast("string").alias("text"),
-                        F.lit("delete").alias("op"),
-                    )),
-                ],
-                feed_after=[res(3)],
-                replayed_bid=2,
+
+        def _drain() -> None:
+            q = bm25_ingest_stream(
+                spark.readStream
+                .schema("doc_id bigint, text string, op string")
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src),
+                store, index_path, checkpoint=ckpt,
+                id_col="doc_id", text_col="text", buckets=_BM25_BUCKETS,
+                tiered_compact_every=2, op_col="op",
             )
-            # replay idempotence is STRUCTURAL: the re-applied deletes
-            # must have added nothing — the vector holds the marker set
-            # exactly once
-            n_vec = spark.read.parquet(f"{index_path}/deletes").count()
-            if n_vec != n_del:
+            if not q.awaitTermination(600):
+                q.stop()
                 raise RuntimeError(
-                    f"bm25_delstream artifact: {n_vec} vector rows for "
-                    f"{n_del} markers — the delete replay was not "
-                    "idempotent"
+                    "bm25_delstream artifact: stream did not drain"
                 )
 
-        _BM25_DELSTREAM_CACHE[key] = _fresh_bm25_artifact(
-            spark, sf_dir, base, build, read_path=index_path
+        dels = docs.filter(_BM25_DELSTREAM_WHERE)
+        n_del = dels.count()
+        if not n_del:
+            raise RuntimeError(
+                "bm25_delstream artifact: empty delete set — the "
+                "delete leg would be vacuous"
+            )
+        res = lambda m: _ins(  # noqa: E731
+            docs.filter(F.col("doc_id") % _STREAM_MOD == m)
         )
-    return _BM25_DELSTREAM_CACHE[key]
+        # crash after batches {0,1,2}: the latest commit is the
+        # DELETE-carrying batch 2 (fresh inserts + markers in one
+        # micro-batch) — with the state log gone the restart must
+        # classify its insert side committed via the index probe
+        # and re-apply its deletes as a no-op
+        _drive_bm25_stream_crash(
+            spark, src=src, ckpt=ckpt, index_path=index_path,
+            drain=_drain,
+            feed_before=[
+                res(0), res(1),
+                res(2).unionByName(dels.select(
+                    "doc_id",
+                    F.lit(None).cast("string").alias("text"),
+                    F.lit("delete").alias("op"),
+                )),
+            ],
+            feed_after=[res(3)],
+            replayed_bid=2,
+        )
+        # replay idempotence is STRUCTURAL: the re-applied deletes
+        # must have added nothing — the vector holds the marker set
+        # exactly once
+        n_vec = spark.read.parquet(f"{index_path}/deletes").count()
+        if n_vec != n_del:
+            raise RuntimeError(
+                f"bm25_delstream artifact: {n_vec} vector rows for "
+                f"{n_del} markers — the delete replay was not "
+                "idempotent"
+            )
+
+    return catalog.get(
+        "bm25_delstream", spark, sf_dir, "documents",
+        lambda: _fresh_bm25_artifact(
+            spark, sf_dir, base, build, read_path=index_path
+        ),
+    )
 
 
 def _bm25_stream_delete_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1360,16 +1180,11 @@ WHERE rn <= {K}
 # the docs⋈embeddings hybrid corpus is cached once per (session, corpus):
 # every hybrid query shares one materialized join instead of re-joining
 # per call (the reference's facade holds one in-memory index the same way)
-_HYB_DOCS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _hybrid_corpus(spark: SparkSession, sf_dir: str) -> Corpus:
-    key = _live_cache_key(spark, sf_dir, "documents+embeddings")
-    if key not in _HYB_DOCS_CACHE:
-        _evict_superseded(_HYB_DOCS_CACHE, key, lambda df: df.unpersist())
+    def build() -> DataFrame:
         docs = _t(spark, sf_dir, "documents")
         emb = _t(spark, sf_dir, "embeddings")
-        _HYB_DOCS_CACHE[key] = docs.join(
+        return docs.join(
             emb, docs["doc_id"] == emb["vec_id"], "left"
         ).select(
             docs["doc_id"].alias("id"),
@@ -1378,29 +1193,25 @@ def _hybrid_corpus(spark: SparkSession, sf_dir: str) -> Corpus:
             docs["lang"],
             docs["source"],
         ).cache()
-    return Corpus(_HYB_DOCS_CACHE[key], metric="l2", _bm25=_bm25_index(spark, sf_dir))
 
-
-_QVEC_CACHE: dict[tuple[str, str, str], list[float]] = {}
+    docs = catalog.get("hyb_docs", spark, sf_dir, "documents+embeddings", build)
+    return Corpus(docs, metric="l2", _bm25=_bm25_index(spark, sf_dir))
 
 
 def _hybrid_qvec(spark: SparkSession, sf_dir: str) -> list[float]:
-    # memoized per (session, corpus fingerprint): ~20 hybrid queries each
-    # paid a separate .head() Spark job for the SAME immutable testdata
-    # row (optimization guide §1.2 — don't recompute what you throw
-    # away); the fingerprint key (r14, VERDICT r13 #6) drops the vector
-    # when a mid-session regen replaces the embeddings table
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _QVEC_CACHE:
-        _evict_superseded(_QVEC_CACHE, key)
+    # memoized: ~20 hybrid queries each paid a separate .head() Spark job
+    # for the SAME immutable testdata row (optimization guide §1.2 —
+    # don't recompute what you throw away)
+    def build() -> list[float]:
         row = (
             _t(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") == QUERY_VEC_ID)
             .select("embedding")
             .head()
         )
-        _QVEC_CACHE[key] = [float(x) for x in row[0]]
-    return list(_QVEC_CACHE[key])
+        return [float(x) for x in row[0]]
+
+    return list(catalog.get("qvec", spark, sf_dir, "embeddings", build))
 
 
 def _mk_hybrid(kind: str, **kwargs) -> Callable[[SparkSession, str], DataFrame]:
@@ -1460,14 +1271,15 @@ def _hybrid_ivf_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ivf, assigned = _ivf_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    key = (_skey(spark), sf_dir, "probes_q2")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         probed = ivf.probe_lists(np.asarray(qvec), 2)
         _write_rows_once(
             spark, sf_dir, f"{_art_dir(sf_dir)}/ivf/probes_q2.parquet",
             [(int(c),) for c in probed], "cluster_id bigint",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/probes_q2", spark, sf_dir, "embeddings", export)
     corpus = _hybrid_corpus(spark, sf_dir)
     corpus._ivf, corpus._ivf_assigned = ivf, assigned
     hs = (
@@ -1529,14 +1341,16 @@ def _hybrid_delete_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ivf, assigned = _ivf_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    key = (_skey(spark), sf_dir, "probes_q2")
-    if key not in _PROBE_WRITTEN:  # shared artifact — first toucher writes
+
+    def export() -> None:
+        # shared artifact — first toucher writes
         probed = ivf.probe_lists(np.asarray(qvec), 2)
         _write_rows_once(
             spark, sf_dir, f"{_art_dir(sf_dir)}/ivf/probes_q2.parquet",
             [(int(c),) for c in probed], "cluster_id bigint",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/probes_q2", spark, sf_dir, "embeddings", export)
     deleted = assigned.filter(
         f"id % 10 = 7 OR id = {QUERY_VEC_ID}"
     ).select("id")
@@ -1903,7 +1717,7 @@ def _knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch shape evaluates |Q|×|corpus| interpreted HOF folds (~25.6M
     # element ops at sf0.1), which serialized on one core (measured
     # 2.34 s → 1.0 s with the fanout).
-    docs = _fanout(spark, _emb_docs(spark, sf_dir), ("emb_cache", sf_dir))
+    docs = _fanout(spark, _emb_docs(spark, sf_dir), ("embeddings", sf_dir))
     return knn(docs, qs, k=K, metric="l2").select(
         "qid", F.col("id").alias("vec_id"), "score"
     )
@@ -1990,19 +1804,15 @@ SELECT vec_id, ROUND(err, 6) AS max_abs_err FROM d
 # H8/H9 as STORAGE MODES (quantizer.go:136-157): flat search over the
 # scalar-quantized parquet layout — int8 dequantizes inside the scan
 # expression (pure Catalyst), f16 stores squeezed floats at write time
-_SQ_CACHE: dict[tuple[str, str, str], object] = {}
-
-
 def _sq_index(spark: SparkSession, sf_dir: str, mode: str):
     from comet_spark.operators.scalar_quant import ScalarQuantizedIndex
 
-    key = (_skey(spark), sf_dir, mode)
-    if key not in _SQ_CACHE:
-        ix = ScalarQuantizedIndex.build(_emb_docs(spark, sf_dir), mode)
+    def build():
         base = f"{_art_dir(sf_dir)}/sq_{mode}"
-        ix.write(base)
-        _SQ_CACHE[key] = ScalarQuantizedIndex.read(spark, base)
-    return _SQ_CACHE[key]
+        ScalarQuantizedIndex.build(_emb_docs(spark, sf_dir), mode).write(base)
+        return ScalarQuantizedIndex.read(spark, base)
+
+    return catalog.get(f"sq/{mode}", spark, sf_dir, "embeddings", build)
 
 
 def _knn_int8_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2035,8 +1845,8 @@ def _knn_f16_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ix = _sq_index(spark, sf_dir, "float16")
     qvec = _hybrid_qvec(spark, sf_dir)
-    key = (_skey(spark), sf_dir, "f16_q")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         q16 = [
             float(v)
             for v in np.asarray(qvec, dtype=np.float64).astype(np.float16).astype(np.float64)
@@ -2045,7 +1855,8 @@ def _knn_f16_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, f"{_art_dir(sf_dir)}/sq_float16/q16.parquet",
             [(q16,)], "qv array<double>",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/f16_q", spark, sf_dir, "embeddings", export)
     res = ix.search(qvec, k=K)
     return res.select(F.col("id").alias("vec_id"), "score")
 
@@ -2844,7 +2655,7 @@ FROM orders QUALIFY order_seq <= 3
 # ---------------------------------------------------------------------------
 
 # trained layouts are built once per corpus (like any index) and reused by
-# every query against that corpus — memoized per (session, sf_dir).
+# every query against that corpus.
 #
 # Trained artifacts (centroids, probe sets, LUTs, codes) are exported to
 # parquet under .artifacts/ann/<sf>/ at build time: the partitioned docs
@@ -2852,7 +2663,6 @@ FROM orders QUALIFY order_seq <= 3
 # 277-301), and the side tables let the DuckDB oracle recompute the pruned
 # scan exactly — flipping the approximate paths from rows-only checks to
 # hash-matched ones.
-_IVF_CACHE: dict[tuple[str, str], tuple] = {}
 
 
 def _write_rows(spark: SparkSession, path: str, rows: list, schema: str) -> None:
@@ -2862,20 +2672,27 @@ def _write_rows(spark: SparkSession, path: str, rows: list, schema: str) -> None
     spark.createDataFrame(rows, schema).repartition(1).write.mode("overwrite").parquet(path)
 
 
+def _export_once(
+    spark: SparkSession, sf_dir: str, path: str, write: Callable[[], None],
+    table: str = "embeddings",
+) -> None:
+    """Build-once gate for the lazy probe/LUT exports (r14 cold-path work,
+    VERDICT r13 #4): the parquet at ``path`` is a deterministic function
+    of artifacts derived from ``table``, so a ``{path}.sig`` stamp for
+    this corpus plus a readable parquet skips the ``write()`` job."""
+    catalog.build_once(
+        f"{path}.sig", catalog.corpus_sig(sf_dir, table),
+        lambda: spark.read.parquet(path).first(), write,
+    )
+
+
 def _write_rows_once(
     spark: SparkSession, sf_dir: str, path: str, rows: list, schema: str,
     table: str = "embeddings",
 ) -> None:
-    """Corpus-gated twin of :func:`_write_rows` for the lazy probe/LUT
-    exports: the rows are a deterministic function of artifacts derived
-    from ``table``, so when a .sig-stamped copy for this corpus is
-    already on disk the write job is skipped (r14 cold-path work,
-    VERDICT r13 #4). The stamp is written after the parquet — a crash
-    between the two re-routes the next session into the rewrite."""
-    if _probe_export_done(spark, sf_dir, path, table):
-        return
-    _write_rows(spark, path, rows, schema)
-    _probe_export_stamp(sf_dir, path, table)
+    _export_once(
+        spark, sf_dir, path, lambda: _write_rows(spark, path, rows, schema), table
+    )
 
 
 def _ivf_trained(spark: SparkSession, sf_dir: str):
@@ -2883,43 +2700,38 @@ def _ivf_trained(spark: SparkSession, sf_dir: str):
 
     from comet_spark.operators.ann import IVFIndex
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _IVF_CACHE:
-        _evict_superseded(_IVF_CACHE, key)
-        base = f"{_art_dir(sf_dir)}/ivf"
-        ivf = None
-        if _ann_sig_fresh(sf_dir, base):
-            # signature-fresh artifact: reopen instead of retraining —
-            # the centroids/assignment on disk ARE what the oracle
-            # replays, and training is deterministic, so this is the
-            # build-once convention BM25 already uses (guide §6)
-            try:
-                rows = sorted(
-                    spark.read.parquet(f"{base}/centroids.parquet").collect(),
-                    key=lambda r: r["cluster_id"],
-                )
-                ivf = IVFIndex(np.array([r["centroid"] for r in rows]))
-                assigned = spark.read.parquet(f"{base}/assigned.parquet")
-                assigned.first()
-            except Exception:
-                ivf = None
-        if ivf is None:
-            emb = _emb_docs(spark, sf_dir).select("id", "vector").cache()
-            ivf = IVFIndex.train(emb, 8)
-            # the disk layout IS the operator at scale: lists are parquet
-            # partitions, nprobe filter = partition pruning (no other list's
-            # files are read) — asserted on the executed plan in test_plans.py
-            ivf.write(ivf.assign(emb), f"{base}/assigned.parquet")
-            _write_rows(
-                spark, f"{base}/centroids.parquet",
-                [(int(i), [float(x) for x in c]) for i, c in enumerate(ivf.centroids)],
-                "cluster_id bigint, centroid array<double>",
-            )
-            emb.unpersist()
-            assigned = spark.read.parquet(f"{base}/assigned.parquet")
-            _ann_sig_stamp(sf_dir, base)
-        _IVF_CACHE[key] = (ivf, assigned)
-    return _IVF_CACHE[key]
+    base = f"{_art_dir(sf_dir)}/ivf"
+
+    def reopen():
+        # signature-fresh artifact: the centroids/assignment on disk ARE
+        # what the oracle replays, and training is deterministic
+        rows = sorted(
+            spark.read.parquet(f"{base}/centroids.parquet").collect(),
+            key=lambda r: r["cluster_id"],
+        )
+        assigned = spark.read.parquet(f"{base}/assigned.parquet")
+        assigned.first()
+        return IVFIndex(np.array([r["centroid"] for r in rows])), assigned
+
+    def train():
+        emb = _emb_docs(spark, sf_dir).select("id", "vector").cache()
+        ivf = IVFIndex.train(emb, 8)
+        # the disk layout IS the operator at scale: lists are parquet
+        # partitions, nprobe filter = partition pruning (no other list's
+        # files are read) — asserted on the executed plan in test_plans.py
+        ivf.write(ivf.assign(emb), f"{base}/assigned.parquet")
+        _write_rows(
+            spark, f"{base}/centroids.parquet",
+            [(int(i), [float(x) for x in c]) for i, c in enumerate(ivf.centroids)],
+            "cluster_id bigint, centroid array<double>",
+        )
+        emb.unpersist()
+        return ivf, spark.read.parquet(f"{base}/assigned.parquet")
+
+    return catalog.get(
+        "ivf", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, base, reopen, train),
+    )
 
 
 def _ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2939,25 +2751,20 @@ _register(
 )
 
 
-# keys are (session, sf_dir, name) — plus the corpus fingerprint as a
-# 4th element for probes layered over fingerprint-gated stream
-# artifacts (hnsw_live/hnsw_compact candidates)
-_PROBE_WRITTEN: set[tuple[str, ...]] = {*()}
-
-
 def _ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     ivf, assigned = _ivf_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    key = (_skey(spark), sf_dir, "probes_q2")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         probed = ivf.probe_lists(np.asarray(qvec), 2)
         _write_rows_once(
             spark, sf_dir, f"{_art_dir(sf_dir)}/ivf/probes_q2.parquet",
             [(int(c),) for c in probed], "cluster_id bigint",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/probes_q2", spark, sf_dir, "embeddings", export)
     res = ivf.search(assigned, qvec, k=K, nprobe=2)
     return res.select(F.col("id").alias("vec_id"), "score")
 
@@ -3002,14 +2809,16 @@ def _ivf_delete_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ivf, assigned = _ivf_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    key = (_skey(spark), sf_dir, "probes_q2")
-    if key not in _PROBE_WRITTEN:  # same artifact ivf_knn_nprobe2 uses —
-        probed = ivf.probe_lists(np.asarray(qvec), 2)  # first toucher writes
+
+    def export() -> None:
+        # same artifact ivf_knn_nprobe2 uses — first toucher writes
+        probed = ivf.probe_lists(np.asarray(qvec), 2)
         _write_rows_once(
             spark, sf_dir, f"{_art_dir(sf_dir)}/ivf/probes_q2.parquet",
             [(int(c),) for c in probed], "cluster_id bigint",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/probes_q2", spark, sf_dir, "embeddings", export)
     deleted = assigned.filter(_IVF_DELETE_WHERE).select("id")
     res = ivf.search(assigned, qvec, k=K, nprobe=2, exclude_ids=deleted)
     return res.select(F.col("id").alias("vec_id"), "score")
@@ -3028,10 +2837,6 @@ d AS (SELECT a.id AS vec_id, ROUND({_sql_l2('a.vector', 'q.qv')}, 6) AS score
 SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 """,
 )
-
-
-_PQ_CACHE: dict[tuple[str, str], tuple] = {}
-_IVFPQ_CACHE: dict[tuple[str, str], tuple] = {}
 
 
 PQ_M = 4
@@ -3059,29 +2864,28 @@ def _pq_trained(spark: SparkSession, sf_dir: str):
     same on-disk bytes either way."""
     from comet_spark.operators.ann import PQIndex
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _PQ_CACHE:
-        _evict_superseded(_PQ_CACHE, key)
-        base = f"{_art_dir(sf_dir)}/pq"
-        pq = None
-        if _ann_sig_fresh(sf_dir, base):
-            try:
-                pq = PQIndex.load(spark, f"{base}/model")
-                codes = spark.read.parquet(f"{base}/codes.parquet")
-                codes.first()
-            except Exception:
-                pq = None
-        if pq is None:
-            emb = _emb_docs(spark, sf_dir).select("id", "vector").cache()
-            pq = PQIndex.train(emb, m=PQ_M, nbits=4, max_iter=5)
-            codes = pq.encode(emb)
-            codes.write.mode("overwrite").parquet(f"{base}/codes.parquet")
-            emb.unpersist()
-            codes = spark.read.parquet(f"{base}/codes.parquet")
-            pq.save(spark, f"{base}/model")
-            _ann_sig_stamp(sf_dir, base)
-        _PQ_CACHE[key] = (pq, codes)
-    return _PQ_CACHE[key]
+    base = f"{_art_dir(sf_dir)}/pq"
+
+    def reopen():
+        pq = PQIndex.load(spark, f"{base}/model")
+        codes = spark.read.parquet(f"{base}/codes.parquet")
+        codes.first()
+        return pq, codes
+
+    def train():
+        emb = _emb_docs(spark, sf_dir).select("id", "vector").cache()
+        pq = PQIndex.train(emb, m=PQ_M, nbits=4, max_iter=5)
+        codes = pq.encode(emb)
+        codes.write.mode("overwrite").parquet(f"{base}/codes.parquet")
+        emb.unpersist()
+        codes = spark.read.parquet(f"{base}/codes.parquet")
+        pq.save(spark, f"{base}/model")
+        return pq, codes
+
+    return catalog.get(
+        "pq", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, base, reopen, train),
+    )
 
 
 def _pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3089,15 +2893,16 @@ def _pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pq, codes = _pq_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    key2 = (_skey(spark), sf_dir, "pq_lut_q")
-    if key2 not in _PROBE_WRITTEN:
+
+    def export() -> None:
         lut = pq.lut(np.asarray(qvec))
         _write_rows_once(
             spark, sf_dir, f"{_art_dir(sf_dir)}/pq/lut_q.parquet",
             [(s, c, float(lut[s][c])) for s in range(pq.m) for c in range(pq.ksub)],
             "sub int, code int, dist double",
         )
-        _PROBE_WRITTEN.add(key2)
+
+    catalog.get("probe/pq_lut_q", spark, sf_dir, "embeddings", export)
     res = pq.search(codes, qvec, k=K)
     return res.select(F.col("id").alias("vec_id"), "score")
 
@@ -3134,15 +2939,16 @@ def _pq_delete_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pq_adc(spark, sf_dir)  # trained index + codes/LUT artifacts
     pq, codes = _pq_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    key = (_skey(spark), sf_dir, "pq_delete_nonvacuous")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         undeleted_top = pq.search(codes, qvec, k=K).collect()
         if not any(r["id"] % 7 == 0 for r in undeleted_top):
             raise RuntimeError(
                 "pq_delete_adc: no deleted id in the undeleted ADC top-k — "
                 "the soft-delete skip would be vacuous"
             )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/pq_delete_nonvacuous", spark, sf_dir, "embeddings", export)
     deleted = codes.filter(_PQ_DELETE_WHERE).select("id")
     res = pq.search(codes, qvec, k=K, exclude_ids=deleted)
     return res.select(F.col("id").alias("vec_id"), "score")
@@ -3260,8 +3066,8 @@ def _pq_adc_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pq_adc(spark, sf_dir)  # trained index + codes artifact
     pq, codes = _pq_trained(spark, sf_dir)
     qs = _emb_queries(spark, sf_dir, tuple(range(N_PQ_BATCH)))
-    key = (_skey(spark), sf_dir, "pq_luts_batch")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         rows = []
         for r in qs.sort("qid").collect():
             lut = pq.lut(np.asarray([float(x) for x in r["qvec"]]))
@@ -3274,7 +3080,8 @@ def _pq_adc_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, f"{_art_dir(sf_dir)}/pq/luts_batch.parquet",
             rows, "qid bigint, sub int, code int, dist double",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/pq_luts_batch", spark, sf_dir, "embeddings", export)
     return pq.search_batch(codes, qs, k=K).select(
         "qid", F.col("id").alias("vec_id"), "score"
     )
@@ -3354,26 +3161,27 @@ def _write_cluster_luts(
     nearest coarse lists, the PQ LUT of the query's residual against
     that centroid, as (cluster_id, sub, code, dist) rows.
 
-    With ``sf_dir`` the export is corpus-gated (r14): a .sig-stamped
-    fresh copy on disk skips the write job — the rows are a
-    deterministic function of the (corpus-gated) trained model and the
-    pinned query vector."""
+    With ``sf_dir`` the export is corpus-gated (r14, ``_export_once``) —
+    the rows are a deterministic function of the (corpus-gated) trained
+    model and the pinned query vector."""
     import numpy as np
 
-    if sf_dir is not None and _probe_export_done(spark, sf_dir, path):
-        return
-    q = np.asarray(qvec, dtype=np.float64)
-    rows = []
-    for cid in ix.ivf.probe_lists(q, nprobe):
-        lut = ix.pq.lut(q - ix.ivf.centroids[cid])
-        rows.extend(
-            (int(cid), s, c, float(lut[s][c]))
-            for s in range(ix.pq.m)
-            for c in range(ix.pq.ksub)
-        )
-    _write_rows(spark, path, rows, "cluster_id bigint, sub int, code int, dist double")
-    if sf_dir is not None:
-        _probe_export_stamp(sf_dir, path)
+    def write() -> None:
+        q = np.asarray(qvec, dtype=np.float64)
+        rows = []
+        for cid in ix.ivf.probe_lists(q, nprobe):
+            lut = ix.pq.lut(q - ix.ivf.centroids[cid])
+            rows.extend(
+                (int(cid), s, c, float(lut[s][c]))
+                for s in range(ix.pq.m)
+                for c in range(ix.pq.ksub)
+            )
+        _write_rows(spark, path, rows, "cluster_id bigint, sub int, code int, dist double")
+
+    if sf_dir is None:
+        write()
+    else:
+        _export_once(spark, sf_dir, path, write)
 
 
 def _ivfpq_trained(spark: SparkSession, sf_dir: str):
@@ -3383,28 +3191,27 @@ def _ivfpq_trained(spark: SparkSession, sf_dir: str):
     oracles replay is untouched)."""
     from comet_spark.operators.ann import IVFPQIndex
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _IVFPQ_CACHE:
-        _evict_superseded(_IVFPQ_CACHE, key)
-        base = f"{_art_dir(sf_dir)}/ivfpq"
-        ix = None
-        if _ann_sig_fresh(sf_dir, base):
-            try:
-                ix = IVFPQIndex.load(spark, f"{base}/model")
-                enc = spark.read.parquet(f"{base}/encoded.parquet")
-                enc.first()
-            except Exception:
-                ix = None
-        if ix is None:
-            emb = _emb_docs(spark, sf_dir).select("id", "vector").cache()
-            ix = IVFPQIndex.train(emb, nlist=4, m=PQ_M, nbits=4, max_iter=5)
-            ix.encode(emb).write.mode("overwrite").parquet(f"{base}/encoded.parquet")
-            emb.unpersist()
-            enc = spark.read.parquet(f"{base}/encoded.parquet")
-            ix.save(spark, f"{base}/model")
-            _ann_sig_stamp(sf_dir, base)
-        _IVFPQ_CACHE[key] = (ix, enc)
-    return _IVFPQ_CACHE[key]
+    base = f"{_art_dir(sf_dir)}/ivfpq"
+
+    def reopen():
+        ix = IVFPQIndex.load(spark, f"{base}/model")
+        enc = spark.read.parquet(f"{base}/encoded.parquet")
+        enc.first()
+        return ix, enc
+
+    def train():
+        emb = _emb_docs(spark, sf_dir).select("id", "vector").cache()
+        ix = IVFPQIndex.train(emb, nlist=4, m=PQ_M, nbits=4, max_iter=5)
+        ix.encode(emb).write.mode("overwrite").parquet(f"{base}/encoded.parquet")
+        emb.unpersist()
+        enc = spark.read.parquet(f"{base}/encoded.parquet")
+        ix.save(spark, f"{base}/model")
+        return ix, enc
+
+    return catalog.get(
+        "ivfpq", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, base, reopen, train),
+    )
 
 
 def _ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3412,13 +3219,14 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ix, enc = _ivfpq_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    key2 = (_skey(spark), sf_dir, "ivfpq_luts_q")
-    if key2 not in _PROBE_WRITTEN:
+
+    def export() -> None:
         _write_cluster_luts(
             spark, ix, qvec, f"{_art_dir(sf_dir)}/ivfpq/luts_q.parquet", nprobe=4,
             sf_dir=sf_dir,
         )
-        _PROBE_WRITTEN.add(key2)
+
+    catalog.get("probe/ivfpq_luts_q", spark, sf_dir, "embeddings", export)
     res = ix.search(enc, qvec, k=K, nprobe=4)
     return res.select(F.col("id").alias("vec_id"), "score")
 
@@ -3499,8 +3307,8 @@ def _ivf_batch_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ivf, assigned = _ivf_trained(spark, sf_dir)
     qs = _emb_queries(spark, sf_dir, tuple(range(N_IVF_BATCH)))
-    key = (_skey(spark), sf_dir, "probes_batch2")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         rows = []
         for r in qs.select("qid", "qvec").collect():
             qv = np.asarray([float(x) for x in r["qvec"]])
@@ -3509,7 +3317,8 @@ def _ivf_batch_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, f"{_art_dir(sf_dir)}/ivf/probes_batch2.parquet",
             rows, "qid bigint, cluster_id bigint",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/probes_batch2", spark, sf_dir, "embeddings", export)
     return ivf.search_batch(assigned, qs, k=K, nprobe=2).select(
         "qid", F.col("id").alias("vec_id"), "score"
     )
@@ -3558,9 +3367,6 @@ def _ivf_multi_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register("ivf_multi_sum", _ivf_multi_sum, _sql_knn_multi("sum(score)"))
 
 
-_HNSW_CACHE: dict[tuple[str, str, str], object] = {}
-
-
 def _hnsw_trained(spark: SparkSession, sf_dir: str):
     """Driver-held HNSW over the embeddings corpus, built once per
     CORPUS (r14): the graph persists via HNSWIndex.save (nodes + edges +
@@ -3570,24 +3376,17 @@ def _hnsw_trained(spark: SparkSession, sf_dir: str):
     artifacts downstream queries export are functions of the graph."""
     from comet_spark.operators.hnsw import HNSWIndex
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _HNSW_CACHE:
-        _evict_superseded(_HNSW_CACHE, key)
-        base = f"{_art_dir(sf_dir)}/hnsw/graph"
-        ix = None
-        if _ann_sig_fresh(sf_dir, base):
-            try:
-                ix = HNSWIndex.load(spark, base)
-            except Exception:
-                ix = None
-        if ix is None:
-            ix = HNSWIndex.build(
-                _emb_docs(spark, sf_dir), m=8, ef_construction=100
-            )
-            ix.save(spark, base)
-            _ann_sig_stamp(sf_dir, base)
-        _HNSW_CACHE[key] = ix
-    return _HNSW_CACHE[key]
+    base = f"{_art_dir(sf_dir)}/hnsw/graph"
+
+    def train():
+        ix = HNSWIndex.build(_emb_docs(spark, sf_dir), m=8, ef_construction=100)
+        ix.save(spark, base)
+        return ix
+
+    return catalog.get(
+        "hnsw", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, base, lambda: HNSWIndex.load(spark, base), train),
+    )
 
 
 def _hnsw_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3637,39 +3436,34 @@ def _hnsw_multi_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register("hnsw_multi_sum", _hnsw_multi_sum, _sql_knn_multi("sum(score)"))
 
 
-_DHNSW_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _dhnsw_index(spark: SparkSession, sf_dir: str):
-    """Memoized per-session DistributedHNSW over the embeddings corpus
+    """Memoized DistributedHNSW over the embeddings corpus
     (8 per-partition sub-graphs, deterministic seed) — shared by the
     plain distributed-graph query and the hybrid-over-HNSW cell."""
     from comet_spark.operators.hnsw import DistributedHNSW
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _DHNSW_CACHE:
-        _evict_superseded(_DHNSW_CACHE, key, _unpersist_graphs)
-        # build-once per corpus (r14): the pickled sub-graph blobs ARE
-        # the serving state; a signature-fresh session reads them back
-        # instead of re-running the mapInPandas graph build
-        base = f"{_art_dir(sf_dir)}/dhnsw/graphs"
-        ix = None
-        if _ann_sig_fresh(sf_dir, base):
-            try:
-                ix = DistributedHNSW.load(spark, base)
-                ix.graphs = ix.graphs.cache()
-                ix.graphs.first()
-            except Exception:
-                ix = None
-        if ix is None:
-            ix = DistributedHNSW.build(
-                _emb_docs(spark, sf_dir), m=8, ef_construction=100,
-                num_partitions=8,
-            )
-            ix.save(base)
-            _ann_sig_stamp(sf_dir, base)
-        _DHNSW_CACHE[key] = ix
-    return _DHNSW_CACHE[key]
+    # build-once per corpus (r14): the pickled sub-graph blobs ARE the
+    # serving state; a signature-fresh session reads them back instead
+    # of re-running the mapInPandas graph build
+    base = f"{_art_dir(sf_dir)}/dhnsw/graphs"
+
+    def reopen():
+        ix = DistributedHNSW.load(spark, base)
+        ix.graphs = ix.graphs.cache()
+        ix.graphs.first()
+        return ix
+
+    def train():
+        ix = DistributedHNSW.build(
+            _emb_docs(spark, sf_dir), m=8, ef_construction=100, num_partitions=8,
+        )
+        ix.save(base)
+        return ix
+
+    return catalog.get(
+        "dhnsw", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, base, reopen, train),
+    )
 
 
 def _dhnsw_export_candidates(spark: SparkSession, sf_dir: str) -> str:
@@ -3680,15 +3474,17 @@ def _dhnsw_export_candidates(spark: SparkSession, sf_dir: str) -> str:
     ix = _dhnsw_index(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
     art = f"{_art_dir(sf_dir)}/dhnsw"
-    key2 = (_skey(spark), sf_dir, "dhnsw_cands")
-    if key2 not in _PROBE_WRITTEN:
+
+    def export() -> None:
         path = f"{art}/candidates.parquet"
-        if not _probe_export_done(spark, sf_dir, path):
-            ix.candidates(qvec, ef_search=100).distinct().repartition(
+        _export_once(
+            spark, sf_dir, path,
+            lambda: ix.candidates(qvec, ef_search=100).distinct().repartition(
                 1
-            ).write.mode("overwrite").parquet(path)
-            _probe_export_stamp(sf_dir, path)
-        _PROBE_WRITTEN.add(key2)
+            ).write.mode("overwrite").parquet(path),
+        )
+
+    catalog.get("probe/dhnsw_cands", spark, sf_dir, "embeddings", export)
     return art
 
 
@@ -3845,11 +3641,8 @@ SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 # recluster=...), PQIndex.refresh/encode_inplace, DistributedHNSW.add_batch
 # — each replayed as a registry query whose DuckDB oracle reads the
 # POST-MAINTENANCE artifacts by construction (the same scheme that makes
-# ivf_knn_nprobe2 / hnsw_dist_topk hash-checkable). Every build is
-# memoized per session and REBUILT from scratch each session, so the
-# exported layout always matches the code that produced it.
+# ivf_knn_nprobe2 / hnsw_dist_topk hash-checkable).
 # ---------------------------------------------------------------------------
-_MAINT_CACHE: dict[tuple, object] = {}
 
 
 def _drifted_store(spark: SparkSession, sf_dir: str, name: str, train, ingest, refresh):
@@ -3892,51 +3685,46 @@ def _maint_ivf(spark: SparkSession, sf_dir: str):
     merges segments; the refreshed index then exports the compacted
     view as the ``partitionBy(cluster_id)`` serving layout (lists =
     partitions, as in _ivf_trained)."""
-    key = _live_cache_key(spark, sf_dir, "embeddings") + ("ivf",)
-    if key not in _MAINT_CACHE:
-        import numpy as np
+    import numpy as np
 
-        from comet_spark.operators.ann import IVFIndex
+    from comet_spark.operators.ann import IVFIndex
 
-        # no _evict_superseded here: _MAINT_CACHE holds one entry PER
-        # MAINT NAME under the same (session, sf_dir) — the generic
-        # eviction would drop the sibling layouts. A regen just strands
-        # the old entry (no executor storage pinned; bounded by regens).
-        base = f"{_art_dir(sf_dir)}/maint"
-        # build-once per corpus (r14, VERDICT r13 #4): the whole
-        # drift→refresh→compact pass is deterministic, its outputs
-        # (compacted layout, probes) are the oracle's replay surface on
-        # disk, and the refreshed model persists alongside — a
-        # signature-fresh session reopens all three instead of re-running
-        # the maintenance scaffold.
-        refreshed = None
-        if _ann_sig_fresh(sf_dir, f"{base}/ivf_model"):
-            try:
-                refreshed = IVFIndex.load(spark, f"{base}/ivf_model")
-                layout = spark.read.parquet(f"{base}/ivf_layout.parquet")
-                layout.first()
-                spark.read.parquet(f"{base}/ivf_probes_q2.parquet").first()
-            except Exception:
-                refreshed = None
-        if refreshed is None:
-            refreshed, store = _drifted_store(
-                spark, sf_dir, "ivf",
-                train=lambda d: IVFIndex.train(d, 8, max_iter=10),
-                ingest=lambda ix, d: ix.assign_inplace(d),
-                refresh=lambda ix, view: ix.refresh(view, max_iter=10),
-            )
-            refreshed.write(store.read(), f"{base}/ivf_layout.parquet")
-            layout = spark.read.parquet(f"{base}/ivf_layout.parquet")
-            qvec = _hybrid_qvec(spark, sf_dir)
-            _write_rows(
-                spark, f"{base}/ivf_probes_q2.parquet",
-                [(int(c),) for c in refreshed.probe_lists(np.asarray(qvec), 2)],
-                "cluster_id bigint",
-            )
-            refreshed.save(spark, f"{base}/ivf_model")
-            _ann_sig_stamp(sf_dir, f"{base}/ivf_model")
-        _MAINT_CACHE[key] = (refreshed, layout)
-    return _MAINT_CACHE[key]
+    # build-once per corpus (r14, VERDICT r13 #4): the whole
+    # drift→refresh→compact pass is deterministic, its outputs
+    # (compacted layout, probes) are the oracle's replay surface on
+    # disk, and the refreshed model persists alongside — a
+    # signature-fresh session reopens all three instead of re-running
+    # the maintenance scaffold.
+    base = f"{_art_dir(sf_dir)}/maint"
+
+    def reopen():
+        refreshed = IVFIndex.load(spark, f"{base}/ivf_model")
+        layout = spark.read.parquet(f"{base}/ivf_layout.parquet")
+        layout.first()
+        spark.read.parquet(f"{base}/ivf_probes_q2.parquet").first()
+        return refreshed, layout
+
+    def train():
+        refreshed, store = _drifted_store(
+            spark, sf_dir, "ivf",
+            train=lambda d: IVFIndex.train(d, 8, max_iter=10),
+            ingest=lambda ix, d: ix.assign_inplace(d),
+            refresh=lambda ix, view: ix.refresh(view, max_iter=10),
+        )
+        refreshed.write(store.read(), f"{base}/ivf_layout.parquet")
+        qvec = _hybrid_qvec(spark, sf_dir)
+        _write_rows(
+            spark, f"{base}/ivf_probes_q2.parquet",
+            [(int(c),) for c in refreshed.probe_lists(np.asarray(qvec), 2)],
+            "cluster_id bigint",
+        )
+        refreshed.save(spark, f"{base}/ivf_model")
+        return refreshed, spark.read.parquet(f"{base}/ivf_layout.parquet")
+
+    return catalog.get(
+        "maint/ivf", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, f"{base}/ivf_model", reopen, train),
+    )
 
 
 def _ivf_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3972,46 +3760,41 @@ def _maint_pq(spark: SparkSession, sf_dir: str):
     during the merge rewrite (reference re-Train, ``pq_index.go``); the
     compacted store's raw files — one segment, every id exactly once —
     ARE the merged view, so the oracle replays ADC straight off them."""
-    key = _live_cache_key(spark, sf_dir, "embeddings") + ("pq",)
-    if key not in _MAINT_CACHE:
-        import numpy as np
+    import numpy as np
 
-        from comet_spark.operators.ann import PQIndex
-        from comet_spark.storage.store import DocumentStore
+    from comet_spark.operators.ann import PQIndex
+    from comet_spark.storage.store import DocumentStore
 
-        # no _evict_superseded here: _MAINT_CACHE holds one entry PER
-        # MAINT NAME under the same (session, sf_dir) — the generic
-        # eviction would drop the sibling layouts. A regen just strands
-        # the old entry (no executor storage pinned; bounded by regens).
-        base = f"{_art_dir(sf_dir)}/maint"
-        # build-once per corpus — see _maint_ivf (r14)
-        refreshed = None
-        if _ann_sig_fresh(sf_dir, f"{base}/pq_model"):
-            try:
-                refreshed = PQIndex.load(spark, f"{base}/pq_model")
-                store = DocumentStore(spark, f"{base}/pq_store")
-                store.read().first()
-                spark.read.parquet(f"{base}/pq_lut_q.parquet").first()
-            except Exception:
-                refreshed = None
-        if refreshed is None:
-            refreshed, store = _drifted_store(
-                spark, sf_dir, "pq",
-                train=lambda d: PQIndex.train(d, m=PQ_M, nbits=4, max_iter=5),
-                ingest=lambda ix, d: ix.encode_inplace(d),
-                refresh=lambda ix, view: ix.refresh(view, max_iter=5),
-            )
-            qvec = _hybrid_qvec(spark, sf_dir)
-            lut = refreshed.lut(np.asarray(qvec))
-            _write_rows(
-                spark, f"{base}/pq_lut_q.parquet",
-                [(s, c, float(lut[s][c])) for s in range(refreshed.m) for c in range(refreshed.ksub)],
-                "sub int, code int, dist double",
-            )
-            refreshed.save(spark, f"{base}/pq_model")
-            _ann_sig_stamp(sf_dir, f"{base}/pq_model")
-        _MAINT_CACHE[key] = (refreshed, store)
-    return _MAINT_CACHE[key]
+    base = f"{_art_dir(sf_dir)}/maint"  # build-once per corpus — see _maint_ivf
+
+    def reopen():
+        refreshed = PQIndex.load(spark, f"{base}/pq_model")
+        store = DocumentStore(spark, f"{base}/pq_store")
+        store.read().first()
+        spark.read.parquet(f"{base}/pq_lut_q.parquet").first()
+        return refreshed, store
+
+    def train():
+        refreshed, store = _drifted_store(
+            spark, sf_dir, "pq",
+            train=lambda d: PQIndex.train(d, m=PQ_M, nbits=4, max_iter=5),
+            ingest=lambda ix, d: ix.encode_inplace(d),
+            refresh=lambda ix, view: ix.refresh(view, max_iter=5),
+        )
+        qvec = _hybrid_qvec(spark, sf_dir)
+        lut = refreshed.lut(np.asarray(qvec))
+        _write_rows(
+            spark, f"{base}/pq_lut_q.parquet",
+            [(s, c, float(lut[s][c])) for s in range(refreshed.m) for c in range(refreshed.ksub)],
+            "sub int, code int, dist double",
+        )
+        refreshed.save(spark, f"{base}/pq_model")
+        return refreshed, store
+
+    return catalog.get(
+        "maint/pq", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, f"{base}/pq_model", reopen, train),
+    )
 
 
 def _pq_reencode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4040,36 +3823,34 @@ def _maint_dhnsw(spark: SparkSession, sf_dir: str):
     ``hnsw_index.go:493-552``). Search unions every sub-graph's beam, so
     appended docs are immediately searchable — the candidate export
     below proves it with a hash-checked top-k."""
-    key = _live_cache_key(spark, sf_dir, "embeddings") + ("dhnsw_add",)
-    if key not in _MAINT_CACHE:
-        from comet_spark.operators.hnsw import DistributedHNSW
+    from comet_spark.operators.hnsw import DistributedHNSW
 
-        # build-once per corpus (r14): the MERGED (base + appended)
-        # sub-graph table persists; a signature-fresh session reloads it
-        # instead of re-running build + add_batch — the merged table is
-        # exactly what both paths serve from
-        base = f"{_art_dir(sf_dir)}/maint/dhnsw_graphs"
-        ix = None
-        if _ann_sig_fresh(sf_dir, base):
-            try:
-                ix = DistributedHNSW.load(spark, base)
-                ix.graphs = ix.graphs.cache()
-                ix.graphs.first()
-            except Exception:
-                ix = None
-        if ix is None:
-            emb = _emb_docs(spark, sf_dir)
-            base_ix = DistributedHNSW.build(
-                emb.filter(F.col("id") % 3 == 0), m=8, ef_construction=100,
-                num_partitions=8,
-            )
-            ix = base_ix.add_batch(
-                emb.filter(F.col("id") % 3 != 0), num_partitions=8
-            )
-            ix.save(base)
-            _ann_sig_stamp(sf_dir, base)
-        _MAINT_CACHE[key] = ix
-    return _MAINT_CACHE[key]
+    # build-once per corpus (r14): the MERGED (base + appended)
+    # sub-graph table persists; a signature-fresh session reloads it
+    # instead of re-running build + add_batch — the merged table is
+    # exactly what both paths serve from
+    base = f"{_art_dir(sf_dir)}/maint/dhnsw_graphs"
+
+    def reopen():
+        ix = DistributedHNSW.load(spark, base)
+        ix.graphs = ix.graphs.cache()
+        ix.graphs.first()
+        return ix
+
+    def train():
+        emb = _emb_docs(spark, sf_dir)
+        base_ix = DistributedHNSW.build(
+            emb.filter(F.col("id") % 3 == 0), m=8, ef_construction=100,
+            num_partitions=8,
+        )
+        ix = base_ix.add_batch(emb.filter(F.col("id") % 3 != 0), num_partitions=8)
+        ix.save(base)
+        return ix
+
+    return catalog.get(
+        "maint/dhnsw_add", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, base, reopen, train),
+    )
 
 
 def _hnsw_addbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4081,12 +3862,13 @@ def _hnsw_addbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ix = _maint_dhnsw(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
     art = f"{_art_dir(sf_dir)}/maint/dhnsw_add"
-    key2 = (_skey(spark), sf_dir, "dhnsw_add_cands")
-    if key2 not in _PROBE_WRITTEN:
+
+    def export() -> None:
         ix.candidates(qvec, ef_search=100).distinct().repartition(1).write.mode(
             "overwrite"
         ).parquet(f"{art}/candidates.parquet")
-        _PROBE_WRITTEN.add(key2)
+
+    catalog.get("probe/dhnsw_add_cands", spark, sf_dir, "embeddings", export)
     cand = spark.read.parquet(f"{art}/candidates.parquet")
     res = score_candidates(_emb_docs(spark, sf_dir), cand, qvec, metric="l2", k=K)
     return res.select(F.col("id").alias("vec_id"), "score")
@@ -4105,9 +3887,6 @@ SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 )
 
 
-_AUTO_CORPUS: dict[tuple[str, str], object] = {}
-
-
 def _ivf_auto_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """auto_nprobe made hash-checkable THROUGH the builder knob
     (``with_auto_nprobe``): the probe count is chosen by cumulative
@@ -4121,18 +3900,17 @@ def _ivf_auto_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ivf, assigned = _ivf_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    # one Corpus per session so the list-size memo actually memoizes
-    # across bench passes (the knob's documented once-per-layout cost)
-    key0 = (_skey(spark), sf_dir)
-    if key0 not in _AUTO_CORPUS:
-        from comet_spark.plans.builder import Corpus
-
+    def corpus() -> Corpus:
         c = Corpus(_emb_docs(spark, sf_dir))
         c._ivf, c._ivf_assigned = ivf, assigned
-        _AUTO_CORPUS[key0] = c
-    c = _AUTO_CORPUS[key0]
-    key = (_skey(spark), sf_dir, "probes_auto")
-    if key not in _PROBE_WRITTEN:
+        return c
+
+    # one Corpus per session+corpus so the list-size memo actually
+    # memoizes across bench passes (the knob's documented once-per-layout
+    # cost)
+    c = catalog.get("auto_corpus", spark, sf_dir, "embeddings", corpus)
+
+    def export() -> None:
         n = ivf.auto_nprobe(
             np.asarray(qvec), c._ivf_list_sizes(), target_scan_frac=0.5
         )
@@ -4141,7 +3919,8 @@ def _ivf_auto_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(int(x),) for x in ivf.probe_lists(np.asarray(qvec), n)],
             "cluster_id bigint",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/probes_auto", spark, sf_dir, "embeddings", export)
     res = (
         c.vector_search().with_query(qvec).with_k(K)
         .with_auto_nprobe(0.5).execute()
@@ -4175,13 +3954,14 @@ def _hybrid_ivfpq_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ivfpq_adc(spark, sf_dir)  # trained index + encoded artifact
     ix, enc = _ivfpq_trained(spark, sf_dir)
     qvec = _hybrid_qvec(spark, sf_dir)
-    key = (_skey(spark), sf_dir, "ivfpq_luts_q2")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         _write_cluster_luts(
             spark, ix, qvec, f"{_art_dir(sf_dir)}/ivfpq/luts_q2.parquet", nprobe=2,
             sf_dir=sf_dir,
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/ivfpq_luts_q2", spark, sf_dir, "embeddings", export)
     corpus = _hybrid_corpus(spark, sf_dir)
     corpus._ivfpq, corpus._ivfpq_enc = ix, enc
     hs = (
@@ -4229,41 +4009,36 @@ def _maint_ivfpq(spark: SparkSession, sf_dir: str):
     re-Train, ``ivfpq_index.go:164-341``). Completes the maintenance ×
     layout matrix: IVF (ivf_recluster_knn), PQ (pq_reencode_adc), graph
     (hnsw_addbatch_topk), IVFPQ here."""
-    key = _live_cache_key(spark, sf_dir, "embeddings") + ("ivfpq",)
-    if key not in _MAINT_CACHE:
-        from comet_spark.operators.ann import IVFPQIndex
-        from comet_spark.storage.store import DocumentStore
+    from comet_spark.operators.ann import IVFPQIndex
+    from comet_spark.storage.store import DocumentStore
 
-        # no _evict_superseded here: _MAINT_CACHE holds one entry PER
-        # MAINT NAME under the same (session, sf_dir) — the generic
-        # eviction would drop the sibling layouts. A regen just strands
-        # the old entry (no executor storage pinned; bounded by regens).
-        base = f"{_art_dir(sf_dir)}/maint"
-        # build-once per corpus — see _maint_ivf (r14)
-        refreshed = None
-        if _ann_sig_fresh(sf_dir, f"{base}/ivfpq_model"):
-            try:
-                refreshed = IVFPQIndex.load(spark, f"{base}/ivfpq_model")
-                store = DocumentStore(spark, f"{base}/ivfpq_store")
-                store.read().first()
-                spark.read.parquet(f"{base}/ivfpq_luts_q.parquet").first()
-            except Exception:
-                refreshed = None
-        if refreshed is None:
-            refreshed, store = _drifted_store(
-                spark, sf_dir, "ivfpq",
-                train=lambda d: IVFPQIndex.train(d, nlist=4, m=PQ_M, nbits=4, max_iter=5),
-                ingest=lambda ix, d: ix.encode_inplace(d),
-                refresh=lambda ix, view: ix.refresh(view, max_iter=5),
-            )
-            _write_cluster_luts(
-                spark, refreshed, _hybrid_qvec(spark, sf_dir),
-                f"{base}/ivfpq_luts_q.parquet", nprobe=2,
-            )
-            refreshed.save(spark, f"{base}/ivfpq_model")
-            _ann_sig_stamp(sf_dir, f"{base}/ivfpq_model")
-        _MAINT_CACHE[key] = (refreshed, store)
-    return _MAINT_CACHE[key]
+    base = f"{_art_dir(sf_dir)}/maint"  # build-once per corpus — see _maint_ivf
+
+    def reopen():
+        refreshed = IVFPQIndex.load(spark, f"{base}/ivfpq_model")
+        store = DocumentStore(spark, f"{base}/ivfpq_store")
+        store.read().first()
+        spark.read.parquet(f"{base}/ivfpq_luts_q.parquet").first()
+        return refreshed, store
+
+    def train():
+        refreshed, store = _drifted_store(
+            spark, sf_dir, "ivfpq",
+            train=lambda d: IVFPQIndex.train(d, nlist=4, m=PQ_M, nbits=4, max_iter=5),
+            ingest=lambda ix, d: ix.encode_inplace(d),
+            refresh=lambda ix, view: ix.refresh(view, max_iter=5),
+        )
+        _write_cluster_luts(
+            spark, refreshed, _hybrid_qvec(spark, sf_dir),
+            f"{base}/ivfpq_luts_q.parquet", nprobe=2,
+        )
+        refreshed.save(spark, f"{base}/ivfpq_model")
+        return refreshed, store
+
+    return catalog.get(
+        "maint/ivfpq", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, f"{base}/ivfpq_model", reopen, train),
+    )
 
 
 def _ivfpq_reencode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4699,9 +4474,6 @@ TFIDF_SOURCE = "src0"
 TFIDF_MIN_SIM = 0.8
 
 
-_TFIDF_W_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _tfidf_weights(spark: SparkSession, sf_dir: str):
     """Cached TF-IDF weight + norm side tables for the blocked pair
     query — the weight subtree feeds three consumers (both pair legs +
@@ -4712,18 +4484,14 @@ def _tfidf_weights(spark: SparkSession, sf_dir: str):
     re-ran over the cached weights on every execution."""
     from comet_spark.operators.tfidf import tfidf_norms, tfidf_weights
 
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _TFIDF_W_CACHE:
-        _evict_superseded(
-            _TFIDF_W_CACHE, key,
-            unpersist=lambda pair: [df.unpersist() for df in pair],
-        )
+    def build():
         docs = _t(spark, sf_dir, "documents").filter(
             F.col("source") == TFIDF_SOURCE
         )
         w = tfidf_weights(docs).cache()
-        _TFIDF_W_CACHE[key] = (w, tfidf_norms(w).cache())
-    return _TFIDF_W_CACHE[key]
+        return (w, tfidf_norms(w).cache())
+
+    return catalog.get("tfidf_w", spark, sf_dir, "documents", build)
 
 
 def _tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4834,9 +4602,6 @@ CMS_PROBES = ("table", "join", "spark", "data", "row", "window", "batch", "query
 CMS_D, CMS_W = 4, 256
 
 
-_CMS_COUNTERS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _cms_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch heavy-hitter estimates (sketch.py): the d×w
     counter table is deterministic across engines, so the one-sided
@@ -4856,16 +4621,12 @@ def _cms_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same-session A/B (1.69 vs 2.02 s min) — the term aggregate is
     # computed once per consumer while both original passes shuffle
     # almost nothing (1024 cells / 8 probe terms) — kept as-is.
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _CMS_COUNTERS_CACHE:
-        _evict_superseded(
-            _CMS_COUNTERS_CACHE, key, lambda df: df.unpersist()
-        )
-        tok = docs.select(F.explode("__toks").alias("term"))
-        _CMS_COUNTERS_CACHE[key] = cms_sketch(
-            tok, "term", d=CMS_D, w=CMS_W
-        ).cache()
-    counters = _CMS_COUNTERS_CACHE[key]
+    counters = catalog.get(
+        "cms_counters", spark, sf_dir, "documents",
+        lambda: cms_sketch(
+            docs.select(F.explode("__toks").alias("term")), "term", d=CMS_D, w=CMS_W
+        ).cache(),
+    )
     probes = spark.createDataFrame([(t,) for t in CMS_PROBES], "term string")
     est = cms_estimate(counters, probes, d=CMS_D, w=CMS_W)
     # r14: exact probe counts in-row from the cached token arrays — the
@@ -5030,34 +4791,21 @@ _register(
 # raw embeddings table — equality proves the tiered rewrite preserves
 # exact LSM read semantics on every path (merged-tail drop, retained-
 # file hide, newest-wins update).
-_TIERED_STORE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _tiered_store(spark: SparkSession, sf_dir: str):
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _TIERED_STORE_CACHE:
-        import shutil
+    import shutil
 
-        from comet_spark.storage.store import DocumentStore
+    from comet_spark.storage.store import DocumentStore
 
-        _evict_superseded(_TIERED_STORE_CACHE, key)
-        path = f"{_art_dir(sf_dir)}/maint/tiered_store"
-        # build-once per corpus (r14): the append/update/delete/tiered-
-        # compact sequence is deterministic and its end state IS the
-        # on-disk store — a signature-fresh session reopens it (probing
-        # the tiered-merge invariant) instead of replaying the sequence.
-        # The stamp lives in a SIBLING dir: a foreign file inside the
-        # store root could confuse the store's own directory listing.
-        sig_base = f"{path}.sig"
-        if _ann_sig_fresh(sf_dir, sig_base):
-            try:
-                store = DocumentStore(spark, path)
-                if len(store._segment_ids()) == 2:
-                    store.read().first()
-                    _TIERED_STORE_CACHE[key] = store
-                    return store
-            except Exception:
-                pass
+    path = f"{_art_dir(sf_dir)}/maint/tiered_store"
+
+    def reopen():
+        store = DocumentStore(spark, path)
+        if len(store._segment_ids()) != 2:
+            raise RuntimeError(f"{path}: not the tiered end state")
+        store.read().first()
+        return store
+
+    def build():
         emb = _emb_docs(spark, sf_dir).select(
             "id", F.col("vector").cast("array<double>").alias("vector")
         )
@@ -5082,9 +4830,18 @@ def _tiered_store(spark: SparkSession, sf_dir: str):
         store.delete(emb.filter(F.col("id") % 13 == 0).select("id"))
         store.compact(tiered=True)
         assert len(store._segment_ids()) == 2, "tiered merge did not run"
-        _ann_sig_stamp(sf_dir, sig_base)
-        _TIERED_STORE_CACHE[key] = store
-    return _TIERED_STORE_CACHE[key]
+        return store
+
+    # build-once per corpus (r14): the append/update/delete/tiered-
+    # compact sequence is deterministic and its end state IS the on-disk
+    # store — a signature-fresh session reopens it (probing the
+    # tiered-merge invariant) instead of replaying the sequence. The
+    # stamp lives in a SIBLING dir: a foreign file inside the store root
+    # could confuse the store's own directory listing.
+    return catalog.get(
+        "tiered_store", spark, sf_dir, "embeddings",
+        lambda: _build_once(sf_dir, f"{path}.sig", reopen, build),
+    )
 
 
 def _tiered_store_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5112,14 +4869,6 @@ SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 )
 
 
-_LSM_SEG_TABLES_CACHE: dict[tuple[str, str, str], dict[str, DataFrame]] = {}
-
-
-def _unpersist_lsm_tables(tabs: dict[str, DataFrame]) -> None:
-    for df in tabs.values():
-        df.unpersist()
-
-
 def _lsm_merge_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read-path merge (storage.go:489-629): the same query runs over every
     segment (each segment has its own index → its own corpus stats), then
@@ -5131,7 +4880,7 @@ def _lsm_merge_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     df/stats are per-(seg[,term]) so every segment keeps ITS OWN corpus
     stats exactly as two indexes would, and the per-segment top-k is one
     window over ``seg``. Index build memoized per (session, corpus) with
-    the derived tables cached — the _BM25_CACHE convention (pass 1 pays
+    the derived tables cached — the _bm25_index convention (pass 1 pays
     the build, the warm reading is serving over a BUILT index). Before
     r13 each execution re-tokenized + re-aggregated both halves (~1.9 s);
     two memoized indexes still ran two plans (~1.45 s); the fused plan
@@ -5139,9 +4888,7 @@ def _lsm_merge_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.operators.bm25 import B, K1, _token_table
     from comet_spark.operators.topk import topk, topk_per_group
 
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _LSM_SEG_TABLES_CACHE:
-        _evict_superseded(_LSM_SEG_TABLES_CACHE, key, _unpersist_lsm_tables)
+    def build() -> dict:
         docs = _t(spark, sf_dir, "documents")
         # normalize=False: the write-time NFKC probe is skipped — the
         # driver corpus is ASCII-asserted (tests/test_text.py)
@@ -5167,10 +4914,9 @@ def _lsm_merge_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cache()
         )
-        _LSM_SEG_TABLES_CACHE[key] = {
-            "posts": posts, "doc_len": doc_len, "dft": dft, "stats": stats,
-        }
-    t = _LSM_SEG_TABLES_CACHE[key]
+        return {"posts": posts, "doc_len": doc_len, "dft": dft, "stats": stats}
+
+    t = catalog.get("lsm_seg_tables", spark, sf_dir, "documents", build)
 
     terms: dict[str, int] = {}
     for tok in tokenize_py(BM25_QUERY):
@@ -5346,87 +5092,57 @@ SELECT a_id, b_id, jaccard FROM j WHERE jaccard >= {MIN_JACCARD}
 )
 
 
-_DOCS_NPART_CACHE: dict[tuple[str, str], int] = {}
-
-
 def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents with the scan fanned out to all cores WHEN the input
-    itself can't provide the parallelism: the local corpus is ONE
-    parquet file = one-ish input partition, which serializes the
-    explode-heavy token/shingle pipelines. The repartition is GATED on
-    actual scan parallelism, so on a cluster corpus (many files >=
-    cores) no Exchange is injected and the shipped query shapes are the
-    100 TB shapes verbatim — the equalizer only fires on under-split
-    local inputs."""
-    docs = _t(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    key = (_skey(spark), sf_dir)
-    if key not in _DOCS_NPART_CACHE:  # driver-only file-split count; memoized
-        _DOCS_NPART_CACHE[key] = docs.rdd.getNumPartitions()
-    if _DOCS_NPART_CACHE[key] < par:
-        docs = docs.repartition(par)
-    return docs
+    itself can't provide the parallelism (``_fanout``'s gate): the local
+    corpus is ONE parquet file = one-ish input partition, which
+    serializes the explode-heavy token/shingle pipelines."""
+    return _fanout(spark, _t(spark, sf_dir, "documents"), ("documents", sf_dir))
 
 
 # tokenize-once projection, memoized per (session, corpus): the
 # dedup/quality/funnel/token-stats family all consume the same UAX#29
 # token arrays, so the 4-replace+extract projection runs ONCE and every
-# family member reads the cached arrays — the same design as _BM25_CACHE
+# family member reads the cached arrays — the same design as _bm25_index
 # (the reference likewise tokenizes once into its in-memory index,
 # bm25_index.go:153-166, rather than re-analyzing per query)
-_TOKDOCS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _docs_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.functions.text import ensure_nfkc
 
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _TOKDOCS_CACHE:
-        _evict_superseded(_TOKDOCS_CACHE, key, lambda df: df.unpersist())
-        # ensure_nfkc = write-time normalization: a no-op passthrough on
-        # the ASCII driver corpus (one probe scan), an Arrow NFKC pass on
-        # a non-NFKC corpus — either way queries stay native
-        _TOKDOCS_CACHE[key] = (
-            ensure_nfkc(_docs_par(spark, sf_dir))
-            .withColumn("__toks", tokenize("text"))
-            .cache()
-        )
-    return _TOKDOCS_CACHE[key]
+    # ensure_nfkc = write-time normalization: a no-op passthrough on
+    # the ASCII test corpus (one probe scan), an Arrow NFKC pass on
+    # a non-NFKC corpus — either way queries stay native
+    return catalog.get(
+        "tokdocs", spark, sf_dir, "documents",
+        lambda: ensure_nfkc(_docs_par(spark, sf_dir))
+        .withColumn("__toks", tokenize("text"))
+        .cache(),
+    )
 
 
 # word-3gram shingle table derived from the cached tokens, shared by the
 # minhash/jaccard/decontam family (all pinned to NGRAM_N)
-_SHINGLES_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.operators.dedup import shingles
 
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _SHINGLES_CACHE:
-        _evict_superseded(_SHINGLES_CACHE, key, lambda df: df.unpersist())
-        _SHINGLES_CACHE[key] = shingles(
-            _docs_tok(spark, sf_dir), tokens_col="__toks", n=NGRAM_N
-        ).cache()
-    return _SHINGLES_CACHE[key]
+    return catalog.get(
+        "shingles", spark, sf_dir, "documents",
+        lambda: shingles(_docs_tok(spark, sf_dir), tokens_col="__toks", n=NGRAM_N).cache(),
+    )
 
 
 # per-doc shingle SETS (one array per doc, same strings as the exploded
 # table above), shared by the minhash family's in-row signature and
 # set-intersection verify paths (r13)
-_SHINGLE_SETS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.operators.dedup import shingle_sets
 
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _SHINGLE_SETS_CACHE:
-        _evict_superseded(_SHINGLE_SETS_CACHE, key, lambda df: df.unpersist())
-        _SHINGLE_SETS_CACHE[key] = shingle_sets(
+    return catalog.get(
+        "shingle_sets", spark, sf_dir, "documents",
+        lambda: shingle_sets(
             _docs_tok(spark, sf_dir), tokens_col="__toks", n=NGRAM_N
-        ).cache()
-    return _SHINGLE_SETS_CACHE[key]
+        ).cache(),
+    )
 
 
 EVAL_MOD = 53  # eval/benchmark set = docs with doc_id % EVAL_MOD == 0
@@ -5560,7 +5276,6 @@ SELECT a_id, b_id, jaccard FROM j WHERE jaccard >= {MIN_JACCARD}
 # max-score across the LSM read path, ``storage_merge.go:13-38``).
 _NEARDUP_MOD = 4  # micro-batches per build
 _NEARDUP_GREEDY_ROUNDS = 4  # SQL unroll depth (measured: 1 round at sf0.01)
-_STREAM_ART_BUILT: set[tuple[str, str, str]] = {*()}
 
 
 def _fresh_stream_artifact(
@@ -5568,15 +5283,12 @@ def _fresh_stream_artifact(
     *, table: str = "documents", probe_paths: list[str] | None = None,
     probe_files: list[str] | None = None,
 ) -> DataFrame:
-    """Corpus-signature-gated build-once scaffold shared by the
-    STREAM-BUILT artifacts — the ``_fresh_bm25_artifact`` pattern with a
-    parquet output table instead of a BM25 index: reopen when the
-    signature matches and ``out`` probes readable, else run
-    ``build_fn()`` (which owns its cleanup: rmtree the lineage) and
-    stamp the signature LAST, so a crash mid-build re-routes the next
-    session into the rebuild. ``table`` is the SOURCE table the
-    signature must cover (events-derived artifacts pass "events" — a
-    regenerated fixture must never serve a stale artifact).
+    """Build-once scaffold shared by the STREAM-BUILT artifacts — the
+    ``_fresh_bm25_artifact`` pattern with a parquet output table instead
+    of a BM25 index: reopen when the signature matches and ``out``
+    probes readable, else run ``build_fn()`` (which owns its cleanup:
+    rmtree the lineage). ``table`` is the SOURCE table the signature
+    must cover (events-derived artifacts pass "events").
     ``probe_paths``: additional parquet components the caller serves
     from (e.g. the CRUD gate's sibling STORE) — a partially-cleaned
     artifact (component gone, ``out`` intact) must route into the
@@ -5585,31 +5297,18 @@ def _fresh_stream_artifact(
     artifacts are POSIX-local by contract). Returns the raw artifact
     read (callers apply their own select — partition col ``batch`` is
     discoverable)."""
-    # the corpus fingerprint is part of the once-per-session key: a
-    # mid-session fixture regen must re-enter the sig check and rebuild
-    # (the cross-session sig file alone can't catch it — the set would
-    # short-circuit first; VERDICT r11)
-    sig = _corpus_sig(sf_dir, table)
-    key = (_skey(spark), sf_dir, base, sig)
-    if key not in _STREAM_ART_BUILT:
-        sig_path = f"{base}/corpus_sig.txt"
-        try:
-            with open(sig_path) as fh:
-                fresh = sig != "" and fh.read() == sig
-            if fresh:
-                spark.read.parquet(out).first()  # artifact probes healthy
-                for p in probe_paths or []:
-                    spark.read.parquet(p).first()
-                for p in probe_files or []:
-                    if not os.path.exists(p):
-                        raise FileNotFoundError(p)
-        except Exception:
-            fresh = False
-        if not fresh:
-            build_fn()
-            with open(sig_path, "w") as fh:
-                fh.write(sig)
-        _STREAM_ART_BUILT.add(key)
+
+    def probe() -> None:
+        for p in [out, *(probe_paths or [])]:
+            spark.read.parquet(p).first()
+        for p in probe_files or []:
+            if not os.path.exists(p):
+                raise FileNotFoundError(p)
+
+    catalog.get(
+        f"stream/{base}", spark, sf_dir, table,
+        lambda: _build_once(sf_dir, base, probe, build_fn, table),
+    )
     return spark.read.parquet(out)
 
 
@@ -5890,6 +5589,8 @@ _register("neardup_stream_admitted", _neardup_stream_admitted, _sql_neardup_stre
 _DECONTAM_EVAL_MOD = 10  # eval split for THIS query (decontam_ngram uses 53)
 _DECONTAM_TRAIN_MOD = 3  # micro-batches per build
 _DECONTAM_NGRAM = 8  # the GPT-3 rule / decontam_ingest default
+
+
 def _decontam_stream_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = f"{_art_dir(sf_dir)}/decontam_stream"
     return _batch_docid(_fresh_stream_artifact(
@@ -6771,15 +6472,10 @@ WHERE doc_id % 8 <> 4
 # stats, so a stale pre-upsert row or an unapplied delete shifts every
 # score). Equality proves the reference's merge-on-read text story
 # (storage.go:489-629) composes with streamed CRUD end-to-end.
-_CRUD_BM25_CACHE: dict[tuple[str, str, str], BM25] = {}
-
-
 def _bm25_crud_index(spark: SparkSession, sf_dir: str) -> BM25:
     from comet_spark.storage.store import DocumentStore
 
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _CRUD_BM25_CACHE:
-        _evict_superseded(_CRUD_BM25_CACHE, key, _unpersist_bm25)
+    def build():
         base = f"{_art_dir(sf_dir)}/store_stream_delete"
         # the artifact scaffold's probe_paths covers the sibling store:
         # a partially-cleaned artifact routes into one rebuild here
@@ -6789,11 +6485,12 @@ def _bm25_crud_index(spark: SparkSession, sf_dir: str) -> BM25:
         # (tests/test_text.py) and the ' v2' suffix is ASCII; cache=True
         # pays the merged-view tokenize once per session, like the
         # other repeat-scored BM25 gates
-        _CRUD_BM25_CACHE[key] = BM25(
+        return BM25(
             store.read(), id_col="doc_id", text_col="text",
             normalize=False, cache=True,
         )
-    return _CRUD_BM25_CACHE[key]
+
+    return catalog.get("crud_bm25", spark, sf_dir, "documents", build)
 
 
 def _bm25_crud_merge_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6836,7 +6533,6 @@ SELECT id AS doc_id, ROUND(score, 6) AS score FROM sc ORDER BY score DESC, id LI
 # equality (ids exactly once, every vector == the upsert-applied
 # source), so the gate is not just top-k-deep.
 _IVF_STREAM_MOD = 3
-_IVF_STREAM_CACHE: dict[tuple[str, str, str], tuple] = {}
 
 
 def _ivf_stream(spark: SparkSession, sf_dir: str):
@@ -6849,9 +6545,7 @@ def _ivf_stream(spark: SparkSession, sf_dir: str):
 
     from comet_spark.operators.ann import IVFIndex
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _IVF_STREAM_CACHE:
-        _evict_superseded(_IVF_STREAM_CACHE, key)
+    def build():
         base = f"{_art_dir(sf_dir)}/ivf_stream"
         layout = _fresh_stream_artifact(
             spark, sf_dir, base, f"{base}/layout.parquet",
@@ -6863,8 +6557,9 @@ def _ivf_stream(spark: SparkSession, sf_dir: str):
             key=lambda r: r["cluster_id"],
         )
         ivf = IVFIndex(np.array([r["centroid"] for r in cents]))
-        _IVF_STREAM_CACHE[key] = (ivf, layout)
-    return _IVF_STREAM_CACHE[key]
+        return (ivf, layout)
+
+    return catalog.get("ivf_stream", spark, sf_dir, "embeddings", build)
 
 
 def _build_ivf_stream_artifact(
@@ -7048,9 +6743,6 @@ ORDER BY score DESC, doc_id LIMIT {K}
 _LIVE_READ_MOD = 4
 
 
-_STORE_LIVE_READ_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _store_live_read_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.operators.knn import knn
     from comet_spark.storage.store import DocumentStore
@@ -7065,15 +6757,12 @@ def _store_live_read_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # view — pinned per (session, corpus) like every other serving view
     # (r14), and scored against the literal query vector (the entry-C
     # knn shape: same doubles, no one-row broadcast cross join)
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _STORE_LIVE_READ_CACHE:
-        _evict_superseded(
-            _STORE_LIVE_READ_CACHE, key, lambda df: df.unpersist()
-        )
-        store = DocumentStore(spark, f"{base}/store", id_col="id")
-        _STORE_LIVE_READ_CACHE[key] = store.read().cache()
+    view = catalog.get(
+        "store_live_read", spark, sf_dir, "embeddings",
+        lambda: DocumentStore(spark, f"{base}/store", id_col="id").read().cache(),
+    )
     fin = knn(
-        _STORE_LIVE_READ_CACHE[key], None, k=K, metric="l2",
+        view, None, k=K, metric="l2",
         id_col="id", vec_col="vector",
         literal_query=_hybrid_qvec(spark, sf_dir),
     ).select(
@@ -7408,15 +7097,12 @@ WHERE (lang = 'zz' AND n_chars > {_META_CRUD_NC_BUMP + 250})
 # serving components with vectors from the source.
 _IVF_LIVE_MOD = 4
 _IVF_LIVE_REFRESH_AT = 2
-_IVF_LIVE_CACHE: dict[tuple[str, str, str], tuple] = {}
 
 
 def _ivf_live(spark: SparkSession, sf_dir: str):
     from comet_spark.streaming.ingest import ivf_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _IVF_LIVE_CACHE:
-        _evict_superseded(_IVF_LIVE_CACHE, key)
+    def build():
         base = f"{_art_dir(sf_dir)}/ivf_live"
         full = f"{base}/index/full_v{_IVF_LIVE_REFRESH_AT}"
         _fresh_stream_artifact(
@@ -7439,8 +7125,9 @@ def _ivf_live(spark: SparkSession, sf_dir: str):
                 f"{base}/index/tail/batch={_IVF_LIVE_MOD - 1}/_SUCCESS",
             ],
         )
-        _IVF_LIVE_CACHE[key] = ivf_serving_view(spark, f"{base}/index")
-    return _IVF_LIVE_CACHE[key]
+        return ivf_serving_view(spark, f"{base}/index")
+
+    return catalog.get("ivf_live", spark, sf_dir, "embeddings", build)
 
 
 def _build_ivf_live_artifact(
@@ -7652,15 +7339,12 @@ ORDER BY score DESC, doc_id LIMIT {K}
 # deterministic ef-beam union) replayed as an exact L2 scan in SQL —
 # the hnsw_dist_topk scheme over stream-grown state.
 _HNSW_LIVE_MOD = 4
-_HNSW_LIVE_CACHE: dict[tuple[str, str, str], object] = {}
 
 
 def _hnsw_live(spark: SparkSession, sf_dir: str):
     from comet_spark.streaming.ingest import hnsw_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _HNSW_LIVE_CACHE:
-        _evict_superseded(_HNSW_LIVE_CACHE, key, _unpersist_graphs)
+    def build():
         base = f"{_art_dir(sf_dir)}/hnsw_live"
         parts = f"{base}/graphs/parts"
         _fresh_stream_artifact(
@@ -7676,8 +7360,9 @@ def _hnsw_live(spark: SparkSession, sf_dir: str):
         )
         ix = hnsw_serving_view(spark, f"{base}/graphs")
         ix.graphs = ix.graphs.cache()
-        _HNSW_LIVE_CACHE[key] = ix
-    return _HNSW_LIVE_CACHE[key]
+        return ix
+
+    return catalog.get("hnsw_live", spark, sf_dir, "embeddings", build)
 
 
 def _build_hnsw_live_artifact(
@@ -7780,22 +7465,18 @@ def _hnsw_export_topk(
     surface. ``vectors`` swaps the exact-scoring authority — the
     source embeddings by default, the CRUD'd store's newest-wins
     merged view for the CRUD gate (deleted ids then drop out of the
-    semi-join, upserted ids score with their newest vector). The probe
-    key carries the corpus fingerprint — a mid-session regen rmtree's
-    the artifact (candidates.parquet included), and a sig-less key
-    would skip the rewrite and read the deleted path."""
+    semi-join, upserted ids score with their newest vector)."""
     from comet_spark.operators.hnsw import score_candidates
 
     qvec = _hybrid_qvec(spark, sf_dir)
     art = f"{_art_dir(sf_dir)}/{art_name}"
-    key2 = _live_cache_key(spark, sf_dir, "embeddings") + (
-        f"{art_name}_cands",
-    )
-    if key2 not in _PROBE_WRITTEN:
+
+    def export() -> None:
         ix.candidates(qvec, ef_search=ef_search).distinct().repartition(
             1
         ).write.mode("overwrite").parquet(f"{art}/candidates.parquet")
-        _PROBE_WRITTEN.add(key2)
+
+    catalog.get(f"probe/{art_name}_cands", spark, sf_dir, "embeddings", export)
     cand = spark.read.parquet(f"{art}/candidates.parquet")
     if vectors is None:
         vectors = _t(spark, sf_dir, "embeddings").select(
@@ -7861,7 +7542,6 @@ SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 # with the exported live markers, vectors from the CASE-transformed
 # source.
 _IVF_CRUD_REFRESH_AT = 2
-_IVF_CRUD_CACHE: dict[tuple[str, str, str], tuple] = {}
 # the transform legs, as SQL so the oracle re-derives them from source
 _IVF_CRUD_UPS_SQL = "vec_id % 4 = 0 AND vec_id % 3 = 0"  # negated @ b1
 _IVF_CRUD_D1_SQL = "vec_id % 10 = 7 AND vec_id % 4 < 3"  # baked delete
@@ -7877,9 +7557,7 @@ _IVF_CRUD_RS_SQL = (
 def _ivf_crud_live(spark: SparkSession, sf_dir: str):
     from comet_spark.streaming.ingest import ivf_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _IVF_CRUD_CACHE:
-        _evict_superseded(_IVF_CRUD_CACHE, key)
+    def build():
         base = f"{_art_dir(sf_dir)}/ivf_crud"
         full = f"{base}/index/full_v{_IVF_CRUD_REFRESH_AT}"
         _fresh_stream_artifact(
@@ -7902,8 +7580,9 @@ def _ivf_crud_live(spark: SparkSession, sf_dir: str):
                 f"{base}/index/_deletes/batch=3/_SUCCESS",
             ],
         )
-        _IVF_CRUD_CACHE[key] = ivf_serving_view(spark, f"{base}/index")
-    return _IVF_CRUD_CACHE[key]
+        return ivf_serving_view(spark, f"{base}/index")
+
+    return catalog.get("ivf_crud", spark, sf_dir, "embeddings", build)
 
 
 def _crud_wave_algebra(corpus: DataFrame, who: str):
@@ -8280,15 +7959,12 @@ ORDER BY score DESC, doc_id LIMIT {K}
 # view's two components (full_v2 codes ∪ the newer tail).
 _PQ_LIVE_MOD = 4
 _PQ_LIVE_REFRESH_AT = 2
-_PQ_LIVE_CACHE: dict[tuple[str, str, str], tuple] = {}
 
 
 def _pq_live(spark: SparkSession, sf_dir: str):
     from comet_spark.streaming.ingest import pq_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _PQ_LIVE_CACHE:
-        _evict_superseded(_PQ_LIVE_CACHE, key, _unpin_view)
+    def build():
         base = f"{_art_dir(sf_dir)}/pq_live"
         full = f"{base}/index/full_v{_PQ_LIVE_REFRESH_AT}"
         _fresh_stream_artifact(
@@ -8305,8 +7981,9 @@ def _pq_live(spark: SparkSession, sf_dir: str):
                 f"{base}/index/tail/batch={_PQ_LIVE_MOD - 1}/_SUCCESS",
             ],
         )
-        _PQ_LIVE_CACHE[key] = _pin_view(pq_serving_view(spark, f"{base}/index"))
-    return _PQ_LIVE_CACHE[key]
+        return _pin_view(pq_serving_view(spark, f"{base}/index"))
+
+    return catalog.get("pq_live", spark, sf_dir, "embeddings", build)
 
 
 def _build_pq_live_artifact(
@@ -8476,15 +8153,12 @@ SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 # ivfpq_adc_knn scheme replayed against live-maintained state.
 _IVFPQ_LIVE_MOD = 4
 _IVFPQ_LIVE_REFRESH_AT = 2
-_IVFPQ_LIVE_CACHE: dict[tuple[str, str, str], tuple] = {}
 
 
 def _ivfpq_live(spark: SparkSession, sf_dir: str):
     from comet_spark.streaming.ingest import ivfpq_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _IVFPQ_LIVE_CACHE:
-        _evict_superseded(_IVFPQ_LIVE_CACHE, key, _unpin_view)
+    def build():
         base = f"{_art_dir(sf_dir)}/ivfpq_live"
         full = f"{base}/index/full_v{_IVFPQ_LIVE_REFRESH_AT}"
         _fresh_stream_artifact(
@@ -8502,8 +8176,9 @@ def _ivfpq_live(spark: SparkSession, sf_dir: str):
                 f"{base}/index/tail/batch={_IVFPQ_LIVE_MOD - 1}/_SUCCESS",
             ],
         )
-        _IVFPQ_LIVE_CACHE[key] = _pin_view(ivfpq_serving_view(spark, f"{base}/index"))
-    return _IVFPQ_LIVE_CACHE[key]
+        return _pin_view(ivfpq_serving_view(spark, f"{base}/index"))
+
+    return catalog.get("ivfpq_live", spark, sf_dir, "embeddings", build)
 
 
 def _build_ivfpq_live_artifact(
@@ -8661,15 +8336,12 @@ SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 # QUALIFY over the exported components (full_v2 codes ∪ tail 3),
 # precedence anti-join on the exported markers, exported-LUT ADC.
 _PQ_CRUD_REFRESH_AT = 2
-_PQ_CRUD_CACHE: dict[tuple[str, str, str], tuple] = {}
 
 
 def _pq_crud_live(spark: SparkSession, sf_dir: str):
     from comet_spark.streaming.ingest import pq_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _PQ_CRUD_CACHE:
-        _evict_superseded(_PQ_CRUD_CACHE, key, _unpin_view)
+    def build():
         base = f"{_art_dir(sf_dir)}/pq_crud"
         full = f"{base}/index/full_v{_PQ_CRUD_REFRESH_AT}"
         _fresh_stream_artifact(
@@ -8692,8 +8364,9 @@ def _pq_crud_live(spark: SparkSession, sf_dir: str):
                 f"{base}/index/_deletes/batch=3/_SUCCESS",
             ],
         )
-        _PQ_CRUD_CACHE[key] = _pin_view(pq_serving_view(spark, f"{base}/index"))
-    return _PQ_CRUD_CACHE[key]
+        return _pin_view(pq_serving_view(spark, f"{base}/index"))
+
+    return catalog.get("pq_crud", spark, sf_dir, "embeddings", build)
 
 
 def _build_pq_crud_artifact(
@@ -8966,15 +8639,12 @@ SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 # QUALIFY over (full_v2 ∪ tail 3) carrying (id, cluster_id, codes),
 # precedence anti-join on the exported markers, per-cluster-LUT ADC.
 _IVFPQ_CRUD_REFRESH_AT = 2
-_IVFPQ_CRUD_CACHE: dict[tuple[str, str, str], tuple] = {}
 
 
 def _ivfpq_crud_live(spark: SparkSession, sf_dir: str):
     from comet_spark.streaming.ingest import ivfpq_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _IVFPQ_CRUD_CACHE:
-        _evict_superseded(_IVFPQ_CRUD_CACHE, key, _unpin_view)
+    def build():
         base = f"{_art_dir(sf_dir)}/ivfpq_crud"
         full = f"{base}/index/full_v{_IVFPQ_CRUD_REFRESH_AT}"
         _fresh_stream_artifact(
@@ -8995,8 +8665,9 @@ def _ivfpq_crud_live(spark: SparkSession, sf_dir: str):
                 f"{base}/index/_deletes/batch=3/_SUCCESS",
             ],
         )
-        _IVFPQ_CRUD_CACHE[key] = _pin_view(ivfpq_serving_view(spark, f"{base}/index"))
-    return _IVFPQ_CRUD_CACHE[key]
+        return _pin_view(ivfpq_serving_view(spark, f"{base}/index"))
+
+    return catalog.get("ivfpq_crud", spark, sf_dir, "embeddings", build)
 
 
 def _build_ivfpq_crud_artifact(
@@ -9257,15 +8928,12 @@ _HNSW_COMPACT_REFRESH_AT = 3
 # same corpus — the >= assert cannot false-fail on a regenerated
 # fixture (review r12 pass 6)
 _HNSW_COMPACT_EF = 100
-_HNSW_COMPACT_CACHE: dict[tuple[str, str, str], object] = {}
 
 
 def _hnsw_compact(spark: SparkSession, sf_dir: str):
     from comet_spark.streaming.ingest import hnsw_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _HNSW_COMPACT_CACHE:
-        _evict_superseded(_HNSW_COMPACT_CACHE, key, _unpersist_graphs)
+    def build():
         base = f"{_art_dir(sf_dir)}/hnsw_compact"
         graphs = f"{base}/graphs"
         _fresh_stream_artifact(
@@ -9284,8 +8952,9 @@ def _hnsw_compact(spark: SparkSession, sf_dir: str):
         )
         ix = hnsw_serving_view(spark, graphs)
         ix.graphs = ix.graphs.cache()
-        _HNSW_COMPACT_CACHE[key] = ix
-    return _HNSW_COMPACT_CACHE[key]
+        return ix
+
+    return catalog.get("hnsw_compact", spark, sf_dir, "embeddings", build)
 
 
 def _build_hnsw_compact_artifact(
@@ -9463,7 +9132,6 @@ SELECT vec_id, score FROM d ORDER BY score, vec_id LIMIT {K}
 # exact L2 over (exported beam ∩ the CASE-transformed alive corpus).
 _HNSW_CRUD_REFRESH_AT = 3
 _HNSW_CRUD_EF = 100
-_HNSW_CRUD_CACHE: dict[tuple[str, str, str], object] = {}
 
 
 def _hnsw_crud(spark: SparkSession, sf_dir: str):
@@ -9474,9 +9142,7 @@ def _hnsw_crud(spark: SparkSession, sf_dir: str):
     from comet_spark.storage.store import DocumentStore
     from comet_spark.streaming.ingest import hnsw_serving_view
 
-    key = _live_cache_key(spark, sf_dir, "embeddings")
-    if key not in _HNSW_CRUD_CACHE:
-        _evict_superseded(_HNSW_CRUD_CACHE, key, lambda t: _unpersist_graphs(t[0]))
+    def build():
         base = f"{_art_dir(sf_dir)}/hnsw_crud"
         graphs = f"{base}/graphs"
         _fresh_stream_artifact(
@@ -9500,8 +9166,9 @@ def _hnsw_crud(spark: SparkSession, sf_dir: str):
         ix = hnsw_serving_view(spark, graphs)
         ix.graphs = ix.graphs.cache()
         store = DocumentStore(spark, f"{base}/store", id_col="id")
-        _HNSW_CRUD_CACHE[key] = (ix, store)
-    return _HNSW_CRUD_CACHE[key]
+        return (ix, store)
+
+    return catalog.get("hnsw_crud", spark, sf_dir, "embeddings", build)
 
 
 def _build_hnsw_crud_artifact(
@@ -9760,7 +9427,6 @@ SELECT vec_id, score FROM vd ORDER BY score, vec_id LIMIT {K}
 # components with the live markers, the text leg folds the full BM25
 # arithmetic over the alive CASE corpus, RRF folds both.
 _DOC_STREAM_REFRESH_AT = 2
-_DOC_STREAM_CACHE: dict[tuple[str, str, str], tuple] = {}
 # wave predicates over doc ids, as SQL (the _IVF_CRUD_* shapes with
 # the documents id column)
 _DOC_UPS_SQL = "d.doc_id % 4 = 0 AND d.doc_id % 3 = 0"
@@ -9779,14 +9445,7 @@ def _doc_stream_views(spark: SparkSession, sf_dir: str):
     from comet_spark.storage.store import DocumentStore
     from comet_spark.streaming.ingest import doc_serving_views
 
-    key = _live_cache_key(spark, sf_dir, "documents+embeddings")
-    if key not in _DOC_STREAM_CACHE:
-        def _unpersist_views(t) -> None:
-            # the merged docs serving view is cache()d too (r14)
-            _unpersist_bm25(t[2])
-            t[3].unpersist()
-
-        _evict_superseded(_DOC_STREAM_CACHE, key, _unpersist_views)
+    def build():
         base = f"{_art_dir(sf_dir)}/doc_stream"
         full = f"{base}/index/full_v{_DOC_STREAM_REFRESH_AT}"
         _fresh_stream_artifact(
@@ -9812,10 +9471,9 @@ def _doc_stream_views(spark: SparkSession, sf_dir: str):
         # normalize=False: the driver corpus is ASCII-asserted and the
         # ' v2'/' v3' suffixes are ASCII (the bm25_crud precedent);
         # cache=True pays the merged-view tokenize once per session
-        _DOC_STREAM_CACHE[key] = doc_serving_views(
-            spark, store, f"{base}/index", normalize=False
-        )
-    return _DOC_STREAM_CACHE[key]
+        return doc_serving_views(spark, store, f"{base}/index", normalize=False)
+
+    return catalog.get("doc_stream", spark, sf_dir, "documents+embeddings", build)
 
 
 def _doc_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10447,21 +10105,13 @@ fp AS (SELECT id, CAST(sum(CASE WHEN w > 0 THEN (1::BIGINT << b) ELSE 0 END) AS 
 # simhash fingerprint table memoized per (session, corpus): the
 # fingerprints query and the banded near-dup pair join share one cached
 # 60-bit table instead of re-running the 60-weight aggregation
-_SIMHASH_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.operators.dedup import simhash_fingerprints
 
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _SIMHASH_CACHE:
-        _evict_superseded(
-            _SIMHASH_CACHE, key, unpersist=lambda df: df.unpersist()
-        )
-        _SIMHASH_CACHE[key] = simhash_fingerprints(
-            _docs_tok(spark, sf_dir), tokens_col="__toks"
-        ).cache()
-    return _SIMHASH_CACHE[key]
+    return catalog.get(
+        "simhash", spark, sf_dir, "documents",
+        lambda: simhash_fingerprints(_docs_tok(spark, sf_dir), tokens_col="__toks").cache(),
+    )
 
 
 def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10550,20 +10200,17 @@ FROM wf GROUP BY id
 
 # the winnowing near-dup pair graph feeds three queries (pairs, clusters,
 # funnel) — memoized per (session, corpus) like the BM25/simhash tables
-_WINNOW_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _winnow_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.operators.fingerprint import winnow_neardup_pairs
 
-    key = (_skey(spark), sf_dir)
-    if key not in _WINNOW_PAIRS_CACHE:
-        _WINNOW_PAIRS_CACHE[key] = winnow_neardup_pairs(
+    return catalog.get(
+        "winnow_pairs", spark, sf_dir, "documents",
+        lambda: winnow_neardup_pairs(
             _docs_tok(spark, sf_dir),
             k=WINNOW_K, w=WINNOW_W, max_df=WINNOW_MAX_DF,
             min_shared=WINNOW_MIN_SHARED, tokens_col="__toks",
-        ).cache()
-    return _WINNOW_PAIRS_CACHE[key]
+        ).cache(),
+    )
 
 
 def _winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10594,9 +10241,6 @@ FROM wp JOIN wsz sa ON wp.a_id = sa.id JOIN wsz sb ON wp.b_id = sb.id
 # --- dedup clusters: connected components over near-dup pairs ----------------
 
 
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs -> clusters -> keep decision (graph.py:connected_components):
     min-label propagation over the winnowing near-dup graph, then
@@ -10606,29 +10250,25 @@ def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.operators.graph import connected_components
     from pyspark.sql import Window
 
-    key = (_skey(spark), sf_dir)
-    if key in _CLUSTERS_CACHE:
-        return _CLUSTERS_CACHE[key]
+    def build() -> DataFrame:
+        docs = _t(spark, sf_dir, "documents")
+        comp = connected_components(_winnow_pairs_memo(spark, sf_dir))
+        ranked = comp.join(docs.select(F.col("doc_id").alias("id"), "n_chars"), "id").select(
+            "id",
+            "component",
+            F.row_number()
+            .over(Window.partitionBy("component").orderBy(F.desc("n_chars"), "id"))
+            .alias("rk"),
+            F.count("*").over(Window.partitionBy("component")).alias("cluster_size"),
+        )
+        return ranked.select(
+            F.col("id").alias("doc_id"),
+            "component",
+            "cluster_size",
+            (F.col("rk") == 1).alias("keep"),
+        ).cache()
 
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _winnow_pairs_memo(spark, sf_dir)
-    comp = connected_components(pairs)
-    ranked = comp.join(docs.select(F.col("doc_id").alias("id"), "n_chars"), "id").select(
-        "id",
-        "component",
-        F.row_number()
-        .over(Window.partitionBy("component").orderBy(F.desc("n_chars"), "id"))
-        .alias("rk"),
-        F.count("*").over(Window.partitionBy("component")).alias("cluster_size"),
-    )
-    out = ranked.select(
-        F.col("id").alias("doc_id"),
-        "component",
-        "cluster_size",
-        (F.col("rk") == 1).alias("keep"),
-    ).cache()
-    _CLUSTERS_CACHE[key] = out
-    return out
+    return catalog.get("clusters", spark, sf_dir, "documents", build)
 
 
 _register(
@@ -10698,9 +10338,6 @@ FROM s
 )
 
 
-_SURPRISAL_TF_CACHE: dict[tuple[str, str, str], tuple] = {}
-
-
 def _token_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-LM proxy quality scoring (quality.py:token_surprisal):
     per-doc mean -ln(corpus unigram probability) — the codec-free
@@ -10711,11 +10348,7 @@ def _token_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.operators.quality import token_surprisal
 
     docs = _docs_tok(spark, sf_dir)
-    key = _live_cache_key(spark, sf_dir, "documents")
-    if key not in _SURPRISAL_TF_CACHE:
-        _evict_superseded(
-            _SURPRISAL_TF_CACHE, key, lambda t: t[0].unpersist()
-        )
+    def build():
         tf = (
             docs.select(F.explode("__toks").alias("term"))
             .groupBy("term")
@@ -10724,9 +10357,9 @@ def _token_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # exact integer (≤ 2⁵³) — the same double the 1-row cross join
         # delivered (sum of longs, cast once)
-        total = float(tf.agg(F.sum("ctf")).first()[0])
-        _SURPRISAL_TF_CACHE[key] = (tf, total)
-    tf, total = _SURPRISAL_TF_CACHE[key]
+        return tf, float(tf.agg(F.sum("ctf")).first()[0])
+
+    tf, total = catalog.get("surprisal_tf", spark, sf_dir, "documents", build)
     out = token_surprisal(docs, tokens_col="__toks", tf_df=tf, total=total)
     return out.select(F.col("id").alias("doc_id"), "n_tokens", "surprisal")
 
@@ -11170,14 +10803,15 @@ def _mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts, temperature=MIX_TEMP,
         target_total=sum(counts.values()) // 2, denom=MIX_DENOM,
     )
-    key = (_skey(spark), sf_dir, "mixture_rates")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         _write_rows(
             spark, f"{_art_dir(sf_dir)}/mixture/rates.parquet",
             [(s, int(r)) for s, r in sorted(rates.items())],
             "lang string, rate bigint",
         )
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/mixture_rates", spark, sf_dir, "documents", export)
     kept = hash_sample(
         docs, id_col="doc_id", rates=rates, stratum_col="lang",
         salt=MIX_SALT, denom=MIX_DENOM,
@@ -11698,10 +11332,11 @@ def _image_feature_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     from comet_spark.multimodal import image_features
 
     feats = image_features(_media(spark, sf_dir), dim=MEDIA_FEAT_DIM)
-    key = (_skey(spark), sf_dir, "media_feats")
-    if key not in _PROBE_WRITTEN:
+
+    def export() -> None:
         feats.write.mode("overwrite").parquet(f"{_art_dir(sf_dir)}/media/features.parquet")
-        _PROBE_WRITTEN.add(key)
+
+    catalog.get("probe/media_feats", spark, sf_dir, "documents", export)
     cols = [
         F.round(F.element_at("features", i + 1), 6).alias(f"f{i}")
         for i in range(MEDIA_FEAT_DIM)

@@ -391,8 +391,8 @@ def lsh_ann_topk(
         # ef padding, and the exact rescore from the same artifacts.
         # Memoized per (session, path, query+config fingerprint) —
         # repeated executions of the SAME search read the already-written
-        # table instead of recomputing signatures (mirrors _PROBE_WRITTEN
-        # in the IVF/PQ query paths); a different query vector or LSH
+        # table instead of recomputing signatures (mirrors the probe-export
+        # catalog entries of __spark_entry__.py); a different query vector or LSH
         # config re-exports rather than silently reusing stale band_hits.
         key = (
             spark.sparkContext.applicationId,

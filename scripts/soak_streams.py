@@ -104,6 +104,7 @@ def main() -> None:
     spark = get_spark("comet-spark-soak-streams")
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry
+    from comet_spark import catalog
 
     qs = entry.queries()
     results: dict[str, dict] = {}
@@ -112,63 +113,13 @@ def main() -> None:
         for name, art in STREAM_GATES:
             # force the FULL drive (feed + crash + replay + asserts),
             # not a cached-artifact reopen — the build IS the soak.
-            # Every per-session cache layered over the artifact must
-            # clear with it: a stale _IVF_STREAM_CACHE entry would serve
-            # a layout DataFrame pointing at the just-deleted directory.
+            # The catalog clears with it: a stale serving entry would
+            # point at the just-deleted directory, a probe marker would
+            # skip rewriting its query-time export, and clear()
+            # unpersists every cached table the entries held, so N
+            # iterations do not pin N copies in executor storage.
             shutil.rmtree(f"{art_root}/{art}", ignore_errors=True)
-            entry._STREAM_ART_BUILT.clear()
-            entry._IVF_STREAM_CACHE.clear()
-            entry._IVF_LIVE_CACHE.clear()
-            entry._IVF_CRUD_CACHE.clear()
-            entry._PQ_LIVE_CACHE.clear()
-            entry._PQ_CRUD_CACHE.clear()
-            entry._IVFPQ_LIVE_CACHE.clear()
-            entry._IVFPQ_CRUD_CACHE.clear()
-            # _HNSW_CRUD_CACHE values are (ix, store) — unpersist the
-            # cached graph blobs before dropping the handle
-            for ix, _store in entry._HNSW_CRUD_CACHE.values():
-                try:
-                    ix.graphs.unpersist()
-                except Exception:
-                    pass
-            entry._HNSW_CRUD_CACHE.clear()
-            # _DOC_STREAM_CACHE values are (ivf, layout, bm, docs) —
-            # the BM25 member pins cache=True side tables
-            for _ivf, _lay, bm, _docs in entry._DOC_STREAM_CACHE.values():
-                try:
-                    entry._unpersist_bm25(bm)
-                except Exception:
-                    pass
-            entry._DOC_STREAM_CACHE.clear()
-            # BM25 caches hold cache=True tables (postings is
-            # corpus-sized) — unpersist before dropping the handle,
-            # same rule as the graph blobs below (review r12 pass 3)
-            for cache in (entry._BM25_LIVE_CACHE, entry._CRUD_BM25_CACHE):
-                for bm in cache.values():
-                    try:
-                        entry._unpersist_bm25(bm)
-                    except Exception:
-                        pass
-            entry._BM25_LIVE_CACHE.clear()
-            # unpersist superseded graph blobs BEFORE dropping the
-            # handle — each soak iteration re-caches a fresh serving
-            # view; without this, N iterations pin N blob-table copies
-            # in executor storage until LRU pressure evicts them
-            for cache in (entry._HNSW_LIVE_CACHE, entry._HNSW_COMPACT_CACHE):
-                for ix in cache.values():
-                    try:
-                        ix.graphs.unpersist()
-                    except Exception:
-                        pass
-                cache.clear()
-            entry._CRUD_BM25_CACHE.clear()
-            # _PROBE_WRITTEN keys survive the artifact rmtree otherwise:
-            # a gate re-run for the same (session, sf_dir) would skip
-            # rewriting its query-time probe (e.g. hnsw_live's
-            # candidates.parquet) and read the deleted file (ADVICE r11).
-            # Clearing the whole set is safe — intact artifacts just
-            # rewrite their probes once.
-            entry._PROBE_WRITTEN.clear()
+            catalog.clear()
             t0 = time.perf_counter()
             n = len(qs[name](spark, sf_dir).collect())
             dt = round(time.perf_counter() - t0, 2)

@@ -237,59 +237,208 @@ def test_ivf_search_batch_merged_probe_table_prunes_per_query(spark):
     assert batch == sorted(loop)
 
 
-# --- mid-session regen flips the r14-rekeyed caches -------------------------
+# --- mid-session regen re-routes every catalog entry -----------------------
+
+def _copy_fixture(dst: str) -> None:
+    from comet_spark.session import TABLES
+
+    os.makedirs(dst)
+    for t in TABLES:
+        shutil.copy(f"{SF_DIR_SMALL}/{t}.parquet", f"{dst}/{t}.parquet")
+
+
+def _oracle_rows(entry_mod, name: str, sf_dir: str):
+    import duckdb
+
+    from comet_spark.session import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    # artifact-replaying oracles read the fixture's own artifact dir
+    sql = entry_mod.oracle_sql()[name].replace(
+        entry_mod._ART01, entry_mod._art_dir(sf_dir)
+    )
+    res = con.execute(sql)
+    return [d[0] for d in res.description], res.fetchall()
+
+
+def _oracle_mismatch(entry_mod, spark, name: str, sf_dir: str) -> str | None:
+    df = entry_mod.queries()[name](spark, sf_dir)
+    cols, orows = _oracle_rows(entry_mod, name, sf_dir)
+    assert sorted(df.columns) == sorted(cols), name
+    order = [df.columns.index(c) for c in cols]
+    srows = [tuple(r[i] for i in order) for r in df.collect()]
+    if sorted(map(repr, srows)) == sorted(map(repr, orows)):
+        return None
+    return f"{name}: {len(srows)} rows vs oracle {len(orows)}"
+
 
 def test_regen_flips_rekeyed_session_caches(spark, tmp_path):
-    """VERDICT r13 #6: _QVEC_CACHE / _EMB_CACHE / _TOKDOCS_CACHE /
-    _SHINGLE_SETS_CACHE / _LSM_SEG_TABLES_CACHE now key on the corpus
-    fingerprint — a regen (same bytes, fresh mtime) must re-route every
-    one of them to a fresh entry."""
+    """VERDICT r13 #6, generalized: every catalog kind a copied fixture
+    touches — table reads, plans, side tables, trained indexes,
+    partition counts, probe exports — is keyed on the corpus
+    fingerprint, so a regen (same bytes, fresh mtime) re-routes each to
+    a fresh entry and evicts the superseded one."""
     import __spark_entry__ as entry_mod
+    from comet_spark import catalog
 
-    sf_dir = str(tmp_path / "sfY")
-    os.makedirs(sf_dir)
-    for t in ("embeddings", "documents"):
-        shutil.copy(f"{SF_DIR_SMALL}/{t}.parquet", f"{sf_dir}/{t}.parquet")
+    sf_dir = str(tmp_path / f"sfY_{os.getpid()}")
+    _copy_fixture(sf_dir)
+    qs = entry_mod.queries()
 
-    def snapshot():
-        return (
+    def touch():
+        objs = (
             entry_mod._hybrid_qvec(spark, sf_dir),
             entry_mod._emb_docs(spark, sf_dir),
             entry_mod._docs_tok(spark, sf_dir),
             entry_mod._doc_shingle_sets(spark, sf_dir),
             entry_mod._lsm_merge_bm25(spark, sf_dir),
         )
+        for name in ("ivf_knn_nprobe2", "winnow_neardup_pairs", "knn_batch100"):
+            qs[name](spark, sf_dir).collect()
+        return objs
 
-    caches = (
-        entry_mod._QVEC_CACHE, entry_mod._EMB_CACHE, entry_mod._TOKDOCS_CACHE,
-        entry_mod._SHINGLE_SETS_CACHE, entry_mod._LSM_SEG_TABLES_CACHE,
-    )
+    def keys_by_kind():
+        out: dict[str, set] = {}
+        for k in catalog._ENTRIES:
+            if k[1] == sf_dir:
+                out.setdefault(k[2], set()).add(k)
+        return out
+
     try:
-        first = snapshot()
-        keys1 = [
-            {k for k in c if k[1] == sf_dir} for c in caches
-        ]
-        assert all(len(ks) == 1 for ks in keys1)
-        for t in ("embeddings", "documents"):
+        first = touch()
+        keys1 = keys_by_kind()
+        assert all(len(ks) == 1 for ks in keys1.values()), keys1
+        for prefix in ("t/", "plan/", "probe/", "npart/", "emb", "ivf", "qvec"):
+            assert any(k.startswith(prefix) for k in keys1), prefix
+        regen = ("embeddings", "documents")
+        for t in regen:
             st = os.stat(f"{sf_dir}/{t}.parquet")
             os.utime(
                 f"{sf_dir}/{t}.parquet",
                 ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000),
             )
-        second = snapshot()
-        keys2 = [
-            {k for k in c if k[1] == sf_dir} for c in caches
-        ]
-        for ks1, ks2, c in zip(keys1, keys2, caches):
+        second = touch()
+        keys2 = keys_by_kind()
+        assert keys2.keys() == keys1.keys()
+        for kind, ks1 in keys1.items():
+            ks2 = keys2[kind]
+            family, _, table = kind.partition("/")
+            if family in ("t", "npart", "refreshed") and table not in regen:
+                assert ks2 == ks1, kind  # a table the regen left alone
+                continue
             # superseded entry evicted, fresh entry present under new key
-            assert ks2 and ks2.isdisjoint(ks1), (ks1, ks2)
+            assert len(ks2) == 1 and ks2.isdisjoint(ks1), (kind, ks1, ks2)
         # fresh DataFrames were built (not the memoized objects)
         for a, b in zip(first[1:], second[1:]):
             assert a is not b
     finally:
-        for c in caches:
-            for k in [k for k in c if k[1] == sf_dir]:
-                del c[k]
+        catalog.clear()
+        shutil.rmtree(entry_mod._art_dir(sf_dir), ignore_errors=True)
+
+
+def test_content_regen_matches_oracles(spark, tmp_path):
+    """A content-changing regen mid-session (documents rewritten with
+    half their rows) must leave every memoized path agreeing with its
+    DuckDB oracle on the NEW corpus — the near-dup pair graph and its
+    clusters, the appended BM25 artifact, and a probe export."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry_mod
+    from comet_spark import catalog
+
+    sf_dir = str(tmp_path / f"sfZ_{os.getpid()}")
+    _copy_fixture(sf_dir)
+    names = (
+        "winnow_neardup_pairs", "dedup_clusters", "bm25_append_score",
+        "image_feature_cols",
+    )
+    try:
+        before = [_oracle_mismatch(entry_mod, spark, n, sf_dir) for n in names]
+        assert before == [None] * len(names), before
+        path = f"{sf_dir}/documents.parquet"
+        docs = pq.read_table(path)
+        os.remove(path)
+        pq.write_table(
+            docs.filter(pc.equal(pc.bit_wise_and(docs["doc_id"], 1), 0)), path
+        )
+        after = [_oracle_mismatch(entry_mod, spark, n, sf_dir) for n in names]
+        assert after == [None] * len(names), after
+    finally:
+        catalog.clear()
+        shutil.rmtree(entry_mod._art_dir(sf_dir), ignore_errors=True)
+
+
+def test_eviction_keeps_dataframes_a_live_entry_holds(spark, tmp_path):
+    """Evicting a superseded entry unpersists the cached DataFrames it
+    held — except one a live entry also holds: after a documents-only
+    regen the embeddings entry's DataFrame stays cached."""
+    import __spark_entry__ as entry_mod
+    from comet_spark import catalog
+
+    sf_dir = str(tmp_path / f"sfW_{os.getpid()}")
+    _copy_fixture(sf_dir)
+    try:
+        emb = entry_mod._emb_docs(spark, sf_dir)
+        own = spark.range(3).cache()
+        catalog.get(
+            "test/holds_emb", spark, sf_dir, "documents+embeddings",
+            lambda: (emb, {"own": own}),
+        )
+        st = os.stat(f"{sf_dir}/documents.parquet")
+        os.utime(
+            f"{sf_dir}/documents.parquet",
+            ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000),
+        )
+        catalog.get(
+            "test/holds_emb", spark, sf_dir, "documents+embeddings", lambda: None
+        )
+        assert entry_mod._emb_docs(spark, sf_dir) is emb
+        assert emb.is_cached, "eviction uncached a DataFrame a live entry holds"
+        assert not own.is_cached, "eviction left the evicted entry's table cached"
+    finally:
+        catalog.clear()
+
+
+def test_query_module_has_no_module_level_memo():
+    """Every memo lives in comet_spark.catalog: __spark_entry__.py must
+    not grow a module-level dict or set named like a cache again."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+    words = ("CACHE", "MEMO", "WRITTEN", "BUILT", "CORPUS")
+    containers = (ast.Dict, ast.Set, ast.DictComp, ast.SetComp)
+    factories = {"dict", "set", "defaultdict", "OrderedDict", "WeakValueDictionary"}
+
+    def is_container(node) -> bool:
+        if isinstance(node, containers):
+            return True
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            return name in factories
+        return False
+
+    offenders = []
+    for node in ast.parse(src.read_text()).body:
+        if isinstance(node, ast.Assign):
+            targets, value, ann = node.targets, node.value, None
+        elif isinstance(node, ast.AnnAssign):
+            targets, value, ann = [node.target], node.value, node.annotation
+        else:
+            continue
+        typed = ann is not None and ast.unparse(ann).split("[")[0] in factories
+        for t in targets:
+            if (
+                isinstance(t, ast.Name)
+                and any(w in t.id.upper() for w in words)
+                and (typed or (value is not None and is_container(value)))
+            ):
+                offenders.append(f"{t.id} (line {node.lineno})")
+    assert not offenders, f"hand-rolled memo structures: {offenders}"
 
 
 # --- gopher top-token rule: in-row sorted-run fold ≡ mode frequency ---------

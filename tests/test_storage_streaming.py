@@ -2324,14 +2324,12 @@ def test_fresh_stream_artifact_probe_paths_route_rebuild(spark, tmp_path):
         spark.range(1).repartition(1).write.mode("overwrite").parquet(probe)
         builds.append(1)
 
+    from comet_spark import catalog
+
     sf_dir = "/root/testdata/sf0.001"
-    key = (
-        entry_mod._skey(spark), sf_dir, base,
-        entry_mod._corpus_sig(sf_dir, "documents"),
-    )
 
     def call():
-        entry_mod._STREAM_ART_BUILT.discard(key)  # fresh-session view
+        catalog.clear()  # fresh-session view
         return entry_mod._fresh_stream_artifact(
             spark, sf_dir, base, out, build, probe_paths=[probe]
         )
@@ -3336,7 +3334,7 @@ def test_hnsw_serving_view_names_torn_meta(spark, tmp_path):
 
 
 def test_live_cache_key_tracks_corpus_fingerprint(spark, tmp_path):
-    """The per-session caches layered over the corpus-signature-gated
+    """The catalog entries layered over the corpus-signature-gated
     stream artifacts key by the SAME fingerprint the scaffold validates
     (VERDICT r11): regenerating the fixture mid-session must rebuild the
     artifact AND drop the memoized serving view in one step — without
@@ -3346,6 +3344,7 @@ def test_live_cache_key_tracks_corpus_fingerprint(spark, tmp_path):
     import shutil
 
     import __spark_entry__ as entry_mod
+    from comet_spark import catalog
 
     sf_dir = str(tmp_path / "sfX")
     os.makedirs(sf_dir)
@@ -3354,34 +3353,37 @@ def test_live_cache_key_tracks_corpus_fingerprint(spark, tmp_path):
         f"{sf_dir}/embeddings.parquet",
     )
     art = entry_mod._art_dir(sf_dir)
+
+    def ivf_stream_keys():
+        return {
+            k for k in catalog._ENTRIES
+            if k[1] == sf_dir and k[2] == "ivf_stream"
+        }
+
     try:
-        k1 = entry_mod._live_cache_key(spark, sf_dir, "embeddings")
+        sig1 = catalog.corpus_sig(sf_dir, "embeddings")
         served1 = entry_mod._ivf_stream(spark, sf_dir)
-        assert k1 in entry_mod._IVF_STREAM_CACHE
+        assert {k[3] for k in ivf_stream_keys()} == {sig1}
         with open(f"{art}/ivf_stream/corpus_sig.txt") as fh:
-            sig1 = fh.read()
-        # the regen: same bytes, fresh mtime — _corpus_sig must move
+            stamp1 = fh.read()
+        # the regen: same bytes, fresh mtime — the fingerprint must move
         st = os.stat(f"{sf_dir}/embeddings.parquet")
         os.utime(
             f"{sf_dir}/embeddings.parquet",
             ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000),
         )
-        k2 = entry_mod._live_cache_key(spark, sf_dir, "embeddings")
-        assert k2 != k1, "fingerprint did not move with the fixture"
+        sig2 = catalog.corpus_sig(sf_dir, "embeddings")
+        assert sig2 != sig1, "fingerprint did not move with the fixture"
         served2 = entry_mod._ivf_stream(spark, sf_dir)
-        assert k2 in entry_mod._IVF_STREAM_CACHE
+        # superseded entry evicted, fresh entry under the new fingerprint
+        assert {k[3] for k in ivf_stream_keys()} == {sig2}
         with open(f"{art}/ivf_stream/corpus_sig.txt") as fh:
-            sig2 = fh.read()
-        assert sig2 != sig1, "scaffold did not rebuild on the regen"
+            stamp2 = fh.read()
+        assert stamp2 != stamp1, "scaffold did not rebuild on the regen"
         assert served2 is not served1, "stale serving view was reused"
     finally:
         shutil.rmtree(art, ignore_errors=True)
-        for cache in (entry_mod._IVF_STREAM_CACHE,):
-            for k in [k for k in cache if k[1] == sf_dir]:
-                del cache[k]
-        entry_mod._STREAM_ART_BUILT.difference_update(
-            {k for k in entry_mod._STREAM_ART_BUILT if k[1] == sf_dir}
-        )
+        catalog.clear()
 
 
 def test_concurrent_reader_loud_fail_or_consistent_during_drain(spark, tmp_path):

@@ -79,23 +79,23 @@ def test_corpus_sig_detects_change_on_single_file_tables(tmp_path):
     must change when the file changes."""
     import os
 
-    import __spark_entry__ as entry
+    from comet_spark.catalog import corpus_sig
 
-    live = entry._corpus_sig(SF_DIR_ORACLE, "documents")
+    live = corpus_sig(SF_DIR_ORACLE, "documents")
     assert live != ""
 
     f = tmp_path / "documents.parquet"
     f.write_bytes(b"one")
-    s1 = entry._corpus_sig(str(tmp_path), "documents")
+    s1 = corpus_sig(str(tmp_path), "documents")
     assert s1 != ""
     f.write_bytes(b"four!")
-    s2 = entry._corpus_sig(str(tmp_path), "documents")
+    s2 = corpus_sig(str(tmp_path), "documents")
     assert s2 != s1  # size changed -> signature changed
 
     d = tmp_path / "dirtable" / "documents.parquet"
     os.makedirs(d)
     (d / "part-0.parquet").write_bytes(b"a")
-    s3 = entry._corpus_sig(str(tmp_path / "dirtable"), "documents")
+    s3 = corpus_sig(str(tmp_path / "dirtable"), "documents")
     assert s3 != "" and "part-0" in s3  # directory layout walked
 
-    assert entry._corpus_sig(str(tmp_path), "missing_table") == ""
+    assert corpus_sig(str(tmp_path), "missing_table") == ""
